@@ -11,8 +11,12 @@ Here the "collections" are keyed parquet tables.  Both merge flavors are pure
 DataFrame plans (left-anti join + unionByName), so Catalyst plans the join
 (broadcast when the delta is small — the common incremental case) and the
 writer stays idempotent: re-running a sync with the same inputs produces a
-byte-identical table, which is the reference's core operational guarantee
-(etl.py:143-147 cursor advance + content-hash keys).
+table with the same rows, which is the reference's core operational
+guarantee (etl.py:143-147 cursor advance + content-hash keys).
+``merge_ignore`` is ``old ∪ fresh_rows(old, new)``: the store
+(``plans.sync._write_merged``) writes only :func:`fresh_rows` as new files
+beside the committed ones, so these functions are the semantic spec that
+the append-only writer is tested against.
 
 Scale notes: the left-anti join shuffles on ``_key`` only when both sides are
 large; incremental deltas are broadcast by AQE.  For truly huge targets,
@@ -22,20 +26,24 @@ partition the stored table by a stable bucket of ``_key``
 Production sink design (100 TB, not exercised in this sandbox): a keyed
 upsert over a 100 TB table should be a transactional table-format MERGE —
 ``MERGE INTO target USING delta ON target._key = delta._key WHEN MATCHED
-UPDATE ... WHEN NOT MATCHED INSERT ...`` on Delta Lake or Iceberg — not the
-read-modify-overwrite these functions do.  The format's transaction log
-gives atomic commits + snapshot isolation (a failed sync never half-writes),
-file-level pruning (copy-on-write rewrites only data files containing
-matched keys; merge-on-read defers even that to deletion vectors /
-positional deletes), and time travel for the idempotent-rerun guarantee the
-reference gets from content-hash keys.  The plan shape is unchanged — MERGE
-compiles to the same keyed anti/semi-join against the delta that
-merge_upsert/merge_ignore declare, so these implementations remain the
-engine-portable semantic spec (and the test oracle) for that MERGE; only
-the writer swaps.  Retention (apply_retention) likewise becomes a
-metadata-only ``DELETE WHERE ts < cutoff`` on a time-partitioned table —
-see apply_retention_partitioned for the partition-drop form implemented
-here.
+UPDATE ... WHEN NOT MATCHED INSERT ...`` on Delta Lake or Iceberg.  The
+format's transaction log gives atomic multi-file commits + snapshot
+isolation, file-level pruning (copy-on-write rewrites only data files
+containing matched keys; merge-on-read defers even that to deletion
+vectors / positional deletes), and time travel.  The store here already
+has the log-free half of that design: an ``ignore`` merge is an INSERT of
+fresh rows as new immutable files, each committed by an atomic rename
+(Spark's own file-sink scheme, minus the ``_spark_metadata`` log), and an
+upsert or retention pass commits a whole new version by renaming the
+directory aside and the staged one in.  What the log would add is a
+multi-file atomic commit and readers isolated from a half-applied append.
+The plan shape is unchanged — MERGE compiles to the same keyed
+anti/semi-join against the delta that merge_upsert/fresh_rows declare, so
+these implementations remain the engine-portable semantic spec (and the
+test oracle) for that MERGE; only the writer swaps.  Retention
+(apply_retention) likewise becomes a metadata-only ``DELETE WHERE ts <
+cutoff`` on a time-partitioned table — see apply_retention_partitioned for
+the partition-drop form implemented here.
 """
 
 from __future__ import annotations
@@ -254,6 +262,14 @@ def merge_upsert(old: DataFrame, new: DataFrame, key: str = "_key") -> DataFrame
     return new.unionByName(surviving_old, allowMissingColumns=True)
 
 
+def fresh_rows(old: DataFrame, new: DataFrame, key: str = "_key") -> DataFrame:
+    """The rows an insert-if-absent merge adds: ``new`` deduped on ``key``,
+    minus every key already in ``old``.  Only ``old``'s key column is read,
+    so callers may pass a key-only scan of the stored table.
+    """
+    return new.dropDuplicates([key]).join(old.select(key), on=key, how="left_anti")
+
+
 def merge_ignore(old: DataFrame, new: DataFrame, key: str = "_key") -> DataFrame:
     """Insert-if-absent by key: first write wins, duplicates dropped.
 
@@ -262,8 +278,7 @@ def merge_ignore(old: DataFrame, new: DataFrame, key: str = "_key") -> DataFrame
     ``new`` is also deduped within itself (the reference relies on Arango
     dropping intra-batch duplicate keys).
     """
-    fresh = new.dropDuplicates([key]).join(old.select(key), on=key, how="left_anti")
-    return old.unionByName(fresh, allowMissingColumns=True)
+    return old.unionByName(fresh_rows(old, new, key), allowMissingColumns=True)
 
 
 def merge_array_append(

@@ -9,29 +9,49 @@ Reference lifecycle (SURVEY.md §3):
   — re-running any chunk is a no-op (content-hash keys).
 
 Here each collection is one DataFrame DAG -> keyed parquet via the merge
-sinks in ``io``.  The chunk loop survives only as an *orchestration* over
-time windows — every chunk runs the same DAG with a different filter, and
-the idempotency tests assert 1-chunk == N-chunk == re-run equality
-(the reference's core operational guarantee, L4/L5).
+sinks in ``io``.  The payments chunk loop survives only as its observable
+effect, a seam predicate inside one plan, and the idempotency tests assert
+1-chunk == N-chunk == re-run equality (the reference's core operational
+guarantee, L4/L5).
 
-Store layout: ``<out_dir>/<collection>`` parquet dirs keyed by ``_key``.
-At scale these would be Delta tables with MERGE; plain parquet + left-anti
-union is the dependency-free equivalent with identical semantics.
+Store layout: ``<out_dir>/<collection>`` is a directory of immutable
+parquet files keyed by ``_key``.  An ``ignore`` merge (the reference's
+``importBulk(onDuplicate='ignore')``) anti-joins the delta against the
+committed keys only and adds the fresh rows as new files, each moved in by
+one atomic ``os.rename``; committed files are never rewritten or deleted,
+so a crash mid-commit leaves a subset of the fresh rows and the re-run adds
+the rest.  An ``upsert`` snapshot, a retention pass and the small-file fold
+commit a whole new version through :func:`_replace`, which renames the live
+directory aside to ``<collection>.prev`` before renaming the staged one in;
+readers restore ``.prev`` if a crash fell between the two renames.  Spark
+writes into ``<out_dir>/<collection>_<random>/data``; a stale staging
+directory is swept by the next merge.  One writer per collection at a time.
+At scale these would be Delta tables with MERGE and a transaction log (see
+the ``io`` module notes).
 """
 
 from __future__ import annotations
 
+import datetime as dt
 import os
+import re
+import shutil
+import tempfile
+from typing import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.scalars import arango_id, content_key, synthetic_lat, synthetic_lon
-from ..io import merge_ignore, merge_upsert, read_table
+from ..io import compact_parquet, fresh_rows, merge_upsert, read_table
 from ..operators.graph import witness_edges
 from ..operators.windows import daily_balances_nested
 
 COLLECTIONS = ("accounts", "hotspots", "cities", "balances", "payments", "witnesses")
+
+# an append-only collection holding more data files than this is folded
+# into one version (io.compact_parquet sizing) by the merge that crossed it
+MAX_DATA_FILES = 64
 
 
 # ---------- vertex collections (snapshot semantics) ----------
@@ -107,26 +127,23 @@ def build_balances(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------- edge collections (append/ignore semantics) ----------
 
 
-def build_payments(
-    spark: SparkSession, sf_dir: str, start: str | None = None, end: str | None = None
-) -> DataFrame:
-    """payments edges for a time window: _key = content hash, _from/_to =
-    account ids (blockchain_queries.py:220-257; v1 shape).  Bounds are
-    half-open-strict like the reference (B2 quirk)."""
-    ev = read_table(spark, sf_dir, "events")
+def payment_edges(events: DataFrame) -> DataFrame:
+    """payments edges from an events frame, batch or streaming: _key =
+    content hash, _from/_to = account ids (blockchain_queries.py:220-257;
+    v1 shape).  The backfill and the stream follower both call this."""
     fields = F.from_json(F.col("props"), "k INT")
-    df = ev.filter(F.col("event_type").isin("purchase", "signup"))
-    if start is not None:
-        df = df.filter(F.col("ts") > F.lit(start))
-    if end is not None:
-        df = df.filter(F.col("ts") < F.lit(end))
-    return df.select(
+    return events.filter(F.col("event_type").isin("purchase", "signup")).select(
         content_key(F.col("event_id"), F.col("user_id"), fields["k"]).alias("_key"),
         arango_id("accounts", F.col("user_id")).alias("_from"),
         arango_id("accounts", F.pmod(F.col("user_id") * 7 + fields["k"], F.lit(1000))).alias("_to"),
         fields["k"].alias("amount"),
         F.col("ts").alias("time"),
     )
+
+
+def build_payments(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """payments edges over the whole events table, unbounded."""
+    return payment_edges(read_table(spark, sf_dir, "events"))
 
 
 def build_witnesses(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -150,19 +167,66 @@ def build_witnesses(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ---------- sync orchestration ----------
+# ---------- store ----------
 
 
 def _store_path(out_dir: str, name: str) -> str:
     return os.path.join(out_dir, name)
 
 
-def _read_store(spark: SparkSession, out_dir: str, name: str) -> DataFrame | None:
+def _recover(path: str) -> None:
+    """Settle a :func:`_replace` that stopped between or after its renames:
+    with the live directory gone, the aside copy is the committed version
+    and goes back; with both present, the new version is committed and the
+    aside copy is dropped."""
+    prev = path + ".prev"
+    if os.path.isdir(prev):
+        if os.path.isdir(path):
+            shutil.rmtree(prev)
+        else:
+            os.rename(prev, path)
+
+
+def _sweep_staging(out_dir: str, name: str) -> None:
+    """Delete staging directories an interrupted write of ``name`` left."""
+    stale = re.compile(re.escape(name) + r"_[a-z0-9_]{8}")  # tempfile.mkdtemp names
+    for entry in os.listdir(out_dir):
+        if stale.fullmatch(entry):
+            shutil.rmtree(os.path.join(out_dir, entry), ignore_errors=True)
+
+
+def _replace(out_dir: str, name: str, write: Callable[[str], object]) -> None:
+    """Commit a whole new version of a collection: ``write`` fills a staging
+    path, the live directory is renamed aside to ``<name>.prev``, the staged
+    one is renamed in, and the aside copy is dropped.  Every committed
+    version stays readable at each step (see :func:`_recover`)."""
     path = _store_path(out_dir, name)
-    try:
-        return spark.read.parquet(path)
-    except Exception:
+    staging = tempfile.mkdtemp(prefix=f"{name}_", dir=out_dir)
+    write(os.path.join(staging, "data"))
+    prev = path + ".prev"
+    if os.path.isdir(path):
+        os.rename(path, prev)
+    os.rename(os.path.join(staging, "data"), path)
+    shutil.rmtree(prev, ignore_errors=True)
+    shutil.rmtree(staging, ignore_errors=True)
+
+
+def _data_files(path: str) -> list[str]:
+    return sorted(f for f in os.listdir(path) if f.endswith(".parquet") and not f.startswith("."))
+
+
+def _read_store(
+    spark: SparkSession, out_dir: str, name: str, schema: str | None = None
+) -> DataFrame | None:
+    """The committed collection, or None if it was never written.  A
+    collection that exists but cannot be read raises (when the plan runs)
+    rather than being taken for an empty one."""
+    path = _store_path(out_dir, name)
+    _recover(path)
+    if not os.path.isdir(path):
         return None
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(path)
 
 
 def _write_merged(
@@ -170,33 +234,50 @@ def _write_merged(
 ) -> None:
     """Merge ``new`` into the stored collection with upsert/ignore semantics.
 
-    Parquet can't be read and overwritten in one job, so the merged result is
-    checkpointed via a staging dir and moved into place (Delta MERGE at
-    scale; this is the dependency-free equivalent)."""
-    import shutil
-    import tempfile
-
-    old = _read_store(spark, out_dir, name)
-    if old is None:
-        merged = new.dropDuplicates(["_key"]) if mode == "ignore" else new
-    elif mode == "upsert":
-        merged = merge_upsert(old, new)
-    else:
-        merged = merge_ignore(old, new)
+    ``upsert`` commits ``merge_upsert(old, new)`` as a new version.
+    ``ignore`` writes only ``io.fresh_rows`` against the committed keys (read
+    with an explicit schema: no inference job) and moves each new part file
+    into the live directory; a merge with no fresh rows commits nothing,
+    and the merge that takes a collection past ``MAX_DATA_FILES`` data
+    files folds it into one version.  The first write of a collection is a
+    whole version either way."""
+    os.makedirs(out_dir, exist_ok=True)
+    _sweep_staging(out_dir, name)
+    if mode == "upsert":
+        old = _read_store(spark, out_dir, name)
+        merged = new if old is None else merge_upsert(old, new)
+        _replace(out_dir, name, merged.write.parquet)
+        return
+    keys = _read_store(spark, out_dir, name, schema="_key string")
+    if keys is None:
+        _replace(out_dir, name, new.dropDuplicates(["_key"]).write.parquet)
+        return
+    path = _store_path(out_dir, name)
     staging = tempfile.mkdtemp(prefix=f"{name}_", dir=out_dir)
-    merged.write.mode("overwrite").parquet(os.path.join(staging, "data"))
-    final = _store_path(out_dir, name)
-    if os.path.exists(final):
-        shutil.rmtree(final)
-    shutil.move(os.path.join(staging, "data"), final)
-    shutil.rmtree(staging, ignore_errors=True)
+    staged = os.path.join(staging, "data")
+    written = Observation()
+    fresh_rows(keys, new).observe(written, F.count(F.lit(1)).alias("rows")).write.parquet(staged)
+    if written.get["rows"]:
+        for f in _data_files(staged):
+            os.rename(os.path.join(staged, f), os.path.join(path, f))
+    shutil.rmtree(staging)
+    if len(_data_files(path)) > MAX_DATA_FILES:
+        _replace(out_dir, name, lambda dest: compact_parquet(spark, path, dest))
+
+
+def read_collection(spark: SparkSession, out_dir: str, name: str) -> DataFrame:
+    path = _store_path(out_dir, name)
+    _recover(path)
+    return spark.read.parquet(path)
+
+
+# ---------- sync orchestration ----------
 
 
 def sync_inventories(spark: SparkSession, sf_dir: str, out_dir: str) -> None:
     """Entry point 1 (etl.py:77-109): snapshot refresh of all vertex
     collections + witness import.  Snapshots use upsert (full re-import is
     idempotent); witnesses use ignore (first write wins)."""
-    os.makedirs(out_dir, exist_ok=True)
     _write_merged(spark, out_dir, "accounts", build_accounts(spark, sf_dir), "upsert")
     _write_merged(spark, out_dir, "hotspots", build_hotspots(spark, sf_dir), "upsert")
     _write_merged(spark, out_dir, "cities", build_cities(spark, sf_dir), "upsert")
@@ -207,30 +288,23 @@ def sync_inventories(spark: SparkSession, sf_dir: str, out_dir: str) -> None:
 def backfill_payments(
     spark: SparkSession, sf_dir: str, out_dir: str, n_chunks: int = 1
 ) -> None:
-    """Entry point 2 (etl.py:111-130): chunked payments backfill.  The chunk
-    loop is pure orchestration — every chunk is the same DAG over a narrower
-    strict-bounds window, merged with first-write-wins.  Chunk seams use the
-    reference's strict inequalities (B2): a row exactly at a seam would be
-    skipped — reproduced deliberately; the default seams fall between the
-    testdata's microsecond timestamps so no row is lost (verified by the
-    1-chunk == N-chunk test)."""
-    import datetime as dt
-
-    os.makedirs(out_dir, exist_ok=True)
-    bounds = read_table(spark, sf_dir, "events").agg(
-        F.min("ts").alias("lo"), F.max("ts").alias("hi")
-    ).first()
-    lo, hi = bounds["lo"], bounds["hi"]
-    span = (hi - lo) / n_chunks
-    for i in range(n_chunks):
-        # strict bounds at every seam (B2): a row exactly at an interior seam
-        # would be skipped, exactly like the reference's chunk loop; the
-        # outermost bounds are widened 1s so lo/hi rows are included.
-        a = (lo - dt.timedelta(seconds=1)) if i == 0 else (lo + i * span)
-        b = (hi + dt.timedelta(seconds=1)) if i == n_chunks - 1 else (lo + (i + 1) * span)
-        chunk = build_payments(spark, sf_dir, start=a.isoformat(sep=" "), end=b.isoformat(sep=" "))
-        _write_merged(spark, out_dir, "payments", chunk, "ignore")
-
-
-def read_collection(spark: SparkSession, out_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(_store_path(out_dir, name))
+    """Entry point 2 (etl.py:111-130): payments backfill as one plan and one
+    first-write-wins merge.  The reference imports ``n_chunks`` time windows
+    with strict bounds (B2), so a row exactly at an interior seam is skipped
+    and a row without a time matches no window.  Here the chunk loop is a
+    seam predicate: rows with a null ``ts`` are always dropped, and for
+    ``n_chunks > 1`` so are rows at ``lo + i * (hi - lo) / n_chunks``
+    (``0 < i < n_chunks``, events' min/max ``ts``) — the only extra jobs
+    are that min/max probe.  The default seams fall between the testdata's
+    microsecond timestamps, so no row is lost (the 1-chunk == N-chunk
+    test)."""
+    events = read_table(spark, sf_dir, "events")
+    keep = F.col("ts").isNotNull()
+    if n_chunks > 1:
+        us = F.unix_micros("ts")
+        lo, hi = events.agg(F.min(us), F.max(us)).first()
+        if lo is not None:
+            span = dt.timedelta(microseconds=hi - lo) / n_chunks
+            seams = [lo + i * span // dt.timedelta(microseconds=1) for i in range(1, n_chunks)]
+            keep = keep & ~us.isin(seams)
+    _write_merged(spark, out_dir, "payments", payment_edges(events.filter(keep)), "ignore")

@@ -11,10 +11,13 @@ Mapping (SURVEY.md §2.L):
 - L5 sync-height cursor        -> the stream checkpoint (exactly-once source
                                   tracking for free)
 
-The micro-batch sink is the same ``merge_ignore`` plan the batch backfill
-uses — streaming and batch share one code path, which is the point of the
-Spark rewrite: the reference implements this machinery by hand (cursor
-advance, chunk loops, multiprocessing); here it is configuration.
+The stream and the batch backfill share one code path: the same
+payment-edge function (``plans.sync.payment_edges``) and the same
+append-only ``ignore`` merge (``plans.sync._write_merged``), which writes
+only the micro-batch's fresh rows as new files, like the reference's
+``importBulk(onDuplicate='ignore')`` — the point of the Spark rewrite: the
+reference implements this machinery by hand (cursor advance, chunk loops,
+multiprocessing); here it is configuration.
 """
 
 from __future__ import annotations
@@ -22,17 +25,15 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from ..functions.scalars import arango_id, content_key
+from ..io import apply_retention, normalize_event_ts
+from ..plans.sync import _replace, _write_merged, payment_edges, read_collection
 
 
 def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source stream over the events table.  ``ts`` is normalized
     schema-adaptively (epoch-nanos long or native timestamp — same
     convention as io.read_table)."""
-    from ..io import normalize_event_ts
-
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     schema = spark.read.parquet(os.path.join(sf_dir, "events.parquet")).schema
     stream = (
@@ -42,20 +43,6 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         .parquet(sf_dir)
     )
     return normalize_event_ts(stream)
-
-
-def payments_from_stream(events: DataFrame) -> DataFrame:
-    """The same payment-edge extraction the batch plan uses
-    (plans.sync.build_payments), applied to a streaming DataFrame —
-    identical column logic, no code fork."""
-    fields = F.from_json(F.col("props"), "k INT")
-    return events.filter(F.col("event_type").isin("purchase", "signup")).select(
-        content_key(F.col("event_id"), F.col("user_id"), fields["k"]).alias("_key"),
-        arango_id("accounts", F.col("user_id")).alias("_from"),
-        arango_id("accounts", F.pmod(F.col("user_id") * 7 + fields["k"], F.lit(1000))).alias("_to"),
-        fields["k"].alias("amount"),
-        F.col("ts").alias("time"),
-    )
 
 
 def follow_payments(
@@ -69,14 +56,11 @@ def follow_payments(
     per micro-batch.  ``processing_time=None`` runs availableNow (bounded
     backfill, L1); a value like '1200 seconds' reproduces the reference's
     poll cadence (L2)."""
-    from ..plans.sync import _write_merged
-
-    os.makedirs(out_dir, exist_ok=True)
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         _write_merged(batch_df.sparkSession, out_dir, "payments", batch_df, "ignore")
 
-    writer = payments_from_stream(_events_stream(spark, sf_dir)).writeStream.foreachBatch(sink).option(
+    writer = payment_edges(_events_stream(spark, sf_dir)).writeStream.foreachBatch(sink).option(
         "checkpointLocation", checkpoint_dir
     )
     if processing_time is None:
@@ -87,17 +71,8 @@ def follow_payments(
 
 
 def evict_witnesses(spark: SparkSession, out_dir: str, cutoff) -> None:
-    """L3 retention: rewrite the witnesses collection keeping rows at/after
-    the cutoff (reference: AQL remove, arango_queries.py:90-99)."""
-    import shutil
-    import tempfile
-
-    from ..io import apply_retention
-
-    path = os.path.join(out_dir, "witnesses")
-    df = apply_retention(spark.read.parquet(path), "time", cutoff)
-    staging = tempfile.mkdtemp(prefix="witnesses_", dir=out_dir)
-    df.write.mode("overwrite").parquet(os.path.join(staging, "data"))
-    shutil.rmtree(path)
-    shutil.move(os.path.join(staging, "data"), path)
-    shutil.rmtree(staging, ignore_errors=True)
+    """L3 retention: commit a new version of the witnesses collection
+    keeping rows at/after the cutoff (reference: AQL remove,
+    arango_queries.py:90-99)."""
+    kept = apply_retention(read_collection(spark, out_dir, "witnesses"), "time", cutoff)
+    _replace(out_dir, "witnesses", kept.write.parquet)

@@ -124,31 +124,49 @@ rows_strategy = st.lists(
 )
 
 
+def _keyed_rows(spark, rows):
+    """(frame, dict) of a keyed table; the last occurrence of a key wins
+    inside a batch, for determinism."""
+    d = {}
+    for k, v in rows:
+        d[str(k)] = v
+    return spark.createDataFrame([(k, v) for k, v in d.items()], "_key STRING, val LONG"), d
+
+
 @given(old_rows=rows_strategy, new_rows=rows_strategy)
 @settings(max_examples=12, deadline=None, suppress_health_check=[HealthCheck.function_scoped_fixture])
 def test_merge_contracts(spark, old_rows, new_rows):
     from helium_arango_etl_spark.io import merge_ignore, merge_upsert
 
-    def mk(rows):
-        # last occurrence wins inside a batch for determinism
-        d = {}
-        for k, v in rows:
-            d[str(k)] = v
-        return (
-            spark.createDataFrame(
-                [(k, v) for k, v in d.items()], "_key STRING, val LONG"
-            ),
-            d,
-        )
-
-    old_df, old_d = mk(old_rows)
-    new_df, new_d = mk(new_rows)
+    old_df, old_d = _keyed_rows(spark, old_rows)
+    new_df, new_d = _keyed_rows(spark, new_rows)
 
     up = {r["_key"]: r["val"] for r in merge_upsert(old_df, new_df).collect()}
     ig = {r["_key"]: r["val"] for r in merge_ignore(old_df, new_df).collect()}
 
     assert up == {**old_d, **new_d}  # new wins
     assert ig == {**new_d, **old_d}  # old wins
+
+
+@given(old_rows=rows_strategy, new_rows=rows_strategy)
+@settings(max_examples=5, deadline=None, suppress_health_check=[HealthCheck.function_scoped_fixture])
+def test_append_only_store_matches_merge_ignore(spark, tmp_path, old_rows, new_rows):
+    """The store's append-only ignore merge holds exactly merge_ignore's rows."""
+    import uuid
+
+    from helium_arango_etl_spark.io import merge_ignore
+    from helium_arango_etl_spark.plans.sync import _write_merged, read_collection
+
+    old_df, _ = _keyed_rows(spark, old_rows)
+    new_df, _ = _keyed_rows(spark, new_rows)
+    out = str(tmp_path / uuid.uuid4().hex)
+    _write_merged(spark, out, "edges", old_df, "ignore")
+    _write_merged(spark, out, "edges", new_df, "ignore")
+
+    def rows(df):
+        return sorted((r["_key"], r["val"]) for r in df.collect())
+
+    assert rows(read_collection(spark, out, "edges")) == rows(merge_ignore(old_df, new_df))
 
 
 # --- min-label propagation vs union-find on random undirected graphs ---

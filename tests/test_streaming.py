@@ -4,8 +4,10 @@ be a no-op."""
 
 from __future__ import annotations
 
-from helium_arango_etl_spark.plans.sync import build_payments, read_collection
+from helium_arango_etl_spark.plans.sync import backfill_payments, build_payments, read_collection
 from helium_arango_etl_spark.streaming.follower import evict_witnesses, follow_payments
+
+from .test_sync_plans import _files
 
 
 def _hash(df):
@@ -48,3 +50,23 @@ def test_retention_eviction(spark, sf_dir, tmp_path):
     evict_witnesses(spark, out, cutoff_ts)
     after = read_collection(spark, out, "witnesses")
     assert after.count() == n_keep > 0
+
+
+def test_stream_appends_to_batch_built_store(spark, sf_dir, tmp_path):
+    """The follower's sink is the append-only merge: streaming the whole
+    events table onto a store backfilled from half of it adds files but
+    leaves the committed ones untouched (same names, sizes, mtimes), and
+    the re-delivered keys are not duplicated."""
+    from helium_arango_etl_spark.io import read_table
+
+    half = tmp_path / "half"
+    read_table(spark, sf_dir, "events").filter("event_id % 2 = 0").write.parquet(str(half / "events.parquet"))
+    out = str(tmp_path / "store")
+    backfill_payments(spark, str(half), out)
+    before = _files(tmp_path / "store" / "payments")
+    follow_payments(spark, sf_dir, out, str(tmp_path / "ckpt"))
+    after = _files(tmp_path / "store" / "payments")
+    assert {f: after[f] for f in before} == before
+    assert len(after) > len(before)
+    batch = build_payments(spark, sf_dir).dropDuplicates(["_key"])
+    assert _hash(read_collection(spark, out, "payments")) == _hash(batch)

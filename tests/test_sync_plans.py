@@ -5,10 +5,14 @@ upsert/ignore sinks, etl.py:143-147)."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
 from helium_arango_etl_spark.plans.sync import (
+    MAX_DATA_FILES,
+    _write_merged,
     backfill_payments,
     build_hotspots,
     build_payments,
@@ -142,3 +146,178 @@ def test_compact_parquet_reduces_files_preserving_rows(spark, sf_dir, tmp_path):
     before = {r["event_id"] for r in ev.collect()}
     after = {r["event_id"] for r in spark.read.parquet(out).collect()}
     assert before == after
+
+
+# ---------- append-only store: commits, crashes, recovery ----------
+
+
+def _files(path):
+    """{data file name: (size, mtime_ns)} of a collection directory."""
+    stats = {f: os.stat(os.path.join(path, f)) for f in os.listdir(path)}
+    return {
+        f: (s.st_size, s.st_mtime_ns)
+        for f, s in stats.items()
+        if f.endswith(".parquet") and not f.startswith(".")
+    }
+
+
+def _keyed(spark, keys, tag):
+    return spark.createDataFrame([(str(k), tag) for k in keys], "_key STRING, src STRING")
+
+
+class _FailingRename:
+    """``os.rename`` that raises on call number ``fail_at`` (0-based)."""
+
+    def __init__(self, fail_at):
+        self.fail_at, self.calls, self.real = fail_at, 0, os.rename
+
+    def __call__(self, src, dst):
+        if self.calls == self.fail_at:
+            raise OSError("injected crash")
+        self.calls += 1
+        self.real(src, dst)
+
+
+def test_ignore_merge_appends_without_touching_committed_files(spark, tmp_path):
+    out = str(tmp_path / "store")
+    _write_merged(spark, out, "edges", _keyed(spark, range(20), "base"), "ignore")
+    before = _files(tmp_path / "store" / "edges")
+    # keys 15..19 are re-delivered, 25 twice within the delta
+    _write_merged(spark, out, "edges", _keyed(spark, [*range(15, 30), 25], "delta"), "ignore")
+    after = _files(tmp_path / "store" / "edges")
+    assert {f: after[f] for f in before} == before
+    assert len(after) > len(before)
+    got = {r["_key"]: r["src"] for r in read_collection(spark, out, "edges").collect()}
+    assert len(got) == read_collection(spark, out, "edges").count() == 30
+    assert {k for k, s in got.items() if s == "base"} == {str(k) for k in range(20)}
+
+
+def test_append_crash_after_k_renames_converges(spark, tmp_path, monkeypatch):
+    base, delta = _keyed(spark, range(10), "base"), _keyed(spark, range(5, 40), "delta")
+    clean, crashed = str(tmp_path / "clean"), str(tmp_path / "crashed")
+    # without AQE coalescing the delta's dedup shuffle writes one file per partition
+    coalesce = spark.conf.get("spark.sql.adaptive.coalescePartitions.enabled")
+    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+    try:
+        for out in (clean, crashed):
+            _write_merged(spark, out, "edges", base, "ignore")
+        _write_merged(spark, clean, "edges", delta, "ignore")
+        n = len(_files(os.path.join(clean, "edges"))) - len(_files(os.path.join(crashed, "edges")))
+        assert n >= 3
+        rename = _FailingRename(fail_at=n // 2)
+        monkeypatch.setattr(os, "rename", rename)
+        with pytest.raises(OSError, match="injected"):
+            _write_merged(spark, crashed, "edges", delta, "ignore")
+        monkeypatch.undo()
+        assert rename.calls == n // 2
+        # the committed part is readable, the rest waits in a stale staging dir
+        assert read_collection(spark, crashed, "edges").count() < 35
+        assert any(e.startswith("edges_") for e in os.listdir(crashed))
+        _write_merged(spark, crashed, "edges", delta, "ignore")
+    finally:
+        spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", coalesce)
+    assert _table_hash(read_collection(spark, crashed, "edges")) == _table_hash(
+        read_collection(spark, clean, "edges")
+    )
+    assert sorted(os.listdir(crashed)) == ["edges"]
+
+
+def test_stale_staging_swept_before_next_merge(spark, tmp_path):
+    out = tmp_path / "store"
+    _write_merged(spark, str(out), "edges", _keyed(spark, range(3), "base"), "ignore")
+    for stale in ("edges_ab12cd_e/data", "edges_0000zzzz", "witnesses_ab12cd34/data"):
+        os.makedirs(out / stale)
+    (out / "edges_ab12cd_e" / "data" / "part-0.parquet").write_bytes(b"junk")
+    _write_merged(spark, str(out), "edges", _keyed(spark, [7], "delta"), "ignore")
+    # only this collection's staging dirs are swept
+    assert sorted(os.listdir(out)) == ["edges", "witnesses_ab12cd34"]
+    assert read_collection(spark, str(out), "edges").count() == 4
+
+
+def test_replace_crash_between_renames_keeps_previous_version(spark, tmp_path, monkeypatch):
+    out = str(tmp_path / "store")
+    v1, v2 = _keyed(spark, range(6), "v1"), _keyed(spark, range(3, 9), "v2")
+    _write_merged(spark, out, "accounts", v1, "upsert")
+    first = _table_hash(read_collection(spark, out, "accounts"))
+    # rename 0 moves the live dir aside, rename 1 (moving the staged one in) fails
+    monkeypatch.setattr(os, "rename", _FailingRename(fail_at=1))
+    with pytest.raises(OSError, match="injected"):
+        _write_merged(spark, out, "accounts", v2, "upsert")
+    monkeypatch.undo()
+    assert not os.path.exists(os.path.join(out, "accounts"))
+    assert _table_hash(read_collection(spark, out, "accounts")) == first
+    _write_merged(spark, out, "accounts", v2, "upsert")
+    expected = _table_hash(v2.unionByName(_keyed(spark, range(3), "v1")))
+    assert _table_hash(read_collection(spark, out, "accounts")) == expected
+    assert sorted(os.listdir(out)) == ["accounts"]
+
+
+def test_unreadable_collection_raises(spark, tmp_path):
+    out = tmp_path / "store"
+    _write_merged(spark, str(out), "edges", _keyed(spark, range(5), "base"), "ignore")
+    (part,) = _files(out / "edges")
+    data = (out / "edges" / part).read_bytes()
+    (out / "edges" / part).write_bytes(data[: len(data) // 2])
+    (out / "edges" / f".{part}.crc").unlink()
+    with pytest.raises(Exception, match="(?i)parquet"):
+        _write_merged(spark, str(out), "edges", _keyed(spark, [9], "delta"), "ignore")
+
+
+def test_noop_merges_commit_nothing(spark, sf_dir, tmp_path):
+    """Re-running the ignore merges of sync_inventories (witnesses) and of
+    backfill_payments leaves their file lists byte-identical."""
+    from helium_arango_etl_spark.plans.sync import build_witnesses
+
+    out = str(tmp_path / "store")
+    backfill_payments(spark, sf_dir, out, n_chunks=2)
+    _write_merged(spark, out, "witnesses", build_witnesses(spark, sf_dir), "ignore")
+    before = {c: _files(tmp_path / "store" / c) for c in ("payments", "witnesses")}
+    backfill_payments(spark, sf_dir, out, n_chunks=1)
+    _write_merged(spark, out, "witnesses", build_witnesses(spark, sf_dir), "ignore")
+    assert {c: _files(tmp_path / "store" / c) for c in before} == before
+
+
+def test_file_count_fold(spark, tmp_path):
+    """70 one-row merges: the merge that passes MAX_DATA_FILES folds the
+    collection into one version, so at most that many files remain and
+    the rows are unchanged.  The first 62 appends are planted as the files
+    a merge commits (one tiny parquet file each), the rest run for real."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    out = tmp_path / "store"
+    _write_merged(spark, str(out), "edges", _keyed(spark, [0], "base"), "ignore")
+    for k in range(1, 63):
+        pq.write_table(
+            pa.table({"_key": [str(k)], "src": ["delta"]}), out / "edges" / f"part-planted-{k:03}.parquet"
+        )
+    counts = []
+    for k in range(63, 71):
+        _write_merged(spark, str(out), "edges", _keyed(spark, [k], "delta"), "ignore")
+        counts.append(len(_files(out / "edges")))
+    assert max(counts) <= MAX_DATA_FILES == 64
+    assert counts[:3] == [64, 1, 2]  # the 65th file triggered the fold
+    expected = _table_hash(_keyed(spark, [0], "base").unionByName(_keyed(spark, range(1, 71), "delta")))
+    assert _table_hash(read_collection(spark, str(out), "edges")) == expected
+
+
+def test_backfill_seam_quirk_b2(spark, tmp_path):
+    """B2 as a seam predicate: a row exactly on the interior seam is dropped
+    with two chunks and kept with one; a row without ts matches no chunk."""
+    import datetime as dt
+
+    sf = tmp_path / "sf"
+    t0 = dt.datetime(2024, 1, 1)
+    rows = [
+        (i, ts, 10 + i, "purchase", 1.0, '{"k": %d}' % i)
+        for i, ts in enumerate([t0, t0 + dt.timedelta(seconds=5), t0 + dt.timedelta(seconds=10), None])
+    ]
+    spark.createDataFrame(
+        rows, "event_id LONG, ts TIMESTAMP, user_id LONG, event_type STRING, value DOUBLE, props STRING"
+    ).coalesce(1).write.parquet(str(sf / "events.parquet"))
+    amounts = {}
+    for n in (1, 2):
+        out = str(tmp_path / f"out{n}")
+        backfill_payments(spark, str(sf), out, n_chunks=n)
+        amounts[n] = sorted(r["amount"] for r in read_collection(spark, out, "payments").collect())
+    assert amounts == {1: [0, 1, 2], 2: [0, 2]}
