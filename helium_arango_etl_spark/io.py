@@ -49,10 +49,11 @@ the partition-drop form implemented here.
 from __future__ import annotations
 
 import os
-import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from .session import cached
 
 TABLES = (
     "region",
@@ -407,14 +408,9 @@ def zorder_key(x_col: str, y_col: str, x_min, x_max, y_min, y_max):
 
 
 # salts depend only on n (Murmur3 of a bigint is session-independent), but
-# the probe runs a Spark job, so key the memo per (session, n) like
-# graph._PAIRS_CACHE — one job per session however many write_zordered
+# the probe runs a Spark job, so memoize it per (session, n) with no input
+# files to fingerprint — one job per session however many write_zordered
 # calls follow (VERDICT r5 #5).
-_SALT_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict[int, list[int]]]" = (
-    weakref.WeakKeyDictionary()
-)
-
-
 def _identity_salts(spark: SparkSession, n: int) -> list[int]:
     """For each partition id p in [0, n), the smallest bigint s with
     pmod(hash(s), n) == p.  Repartitioning on the salt column then places
@@ -423,27 +419,22 @@ def _identity_salts(spark: SparkSession, n: int) -> list[int]:
     One tiny driver-side job of O(n) rows; each residue is missed with
     probability ~e^-64 per round, so the loop all but never repeats.
     Memoized per (session, n): the result is a pure function of n."""
-    from pyspark.sql import functions as F
 
-    per_session = _SALT_CACHE.setdefault(spark, {})
-    cached = per_session.get(n)
-    if cached is not None:
-        return cached
+    def probe() -> list[int]:
+        salts: dict[int, int] = {}
+        lo = 0
+        while len(salts) < n:
+            rows = (
+                spark.range(lo, lo + 64 * n)
+                .select("id", F.pmod(F.hash("id"), F.lit(n)).alias("p"))
+                .collect()
+            )
+            for r in rows:
+                salts.setdefault(r["p"], r["id"])
+            lo += 64 * n
+        return [salts[p] for p in range(n)]
 
-    salts: dict[int, int] = {}
-    lo = 0
-    while len(salts) < n:
-        rows = (
-            spark.range(lo, lo + 64 * n)
-            .select("id", F.pmod(F.hash("id"), F.lit(n)).alias("p"))
-            .collect()
-        )
-        for r in rows:
-            salts.setdefault(r["p"], r["id"])
-        lo += 64 * n
-    out = [salts[p] for p in range(n)]
-    per_session[n] = out
-    return out
+    return cached(spark, ("salts", n), None, probe)
 
 
 def write_zordered(

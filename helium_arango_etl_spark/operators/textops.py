@@ -9,48 +9,37 @@ zero shuffle (per-row only); only downstream aggregations shuffle.
 
 from __future__ import annotations
 
-import weakref
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..io import read_table, spread
+from ..session import cached, clear_caches
 from .graph import _release_local_checkpoint
 
 # token array: whitespace split, empties dropped (both engines agree on this)
 TOKS = "filter(split(text, ' '), x -> x != '')"
 
+# perfbench calls this name; it clears every cached entry of the session
+clear_tok_cache = clear_caches
+
+
 # the tokenized-corpus projection (doc_id, t, dl) is shared by the whole
 # retrieval family (bm25_topk and every query that rides its run) and
 # materialized once per (session, sf_dir) — the textual analog of the
-# prepared-embedding table (similarity._EMB_CACHE) and the witness-edge
+# prepared-embedding table (similarity.embedding_table) and the witness-edge
 # materialization: at 100 TB the corpus tokenization pass dominates, so
 # a resident engine pays it once per sync cycle, not once per consumer.
-_TOK_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict[str, DataFrame]]" = (
-    weakref.WeakKeyDictionary()
-)
-
-
-def clear_tok_cache(spark: SparkSession) -> None:
-    """Drop the session's cached tokenized-corpus tables (bench uses this
-    to price the materialization explicitly, like emb_prepare)."""
-    for df in _TOK_CACHE.pop(spark, {}).values():
-        df.unpersist(blocking=True)
-
-
 def tokenized_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The session-cached (doc_id, t, dl) tokenized corpus projection."""
-    per_session = _TOK_CACHE.setdefault(spark, {})
-    df = per_session.get(sf_dir)
-    if df is None:
-        df = (
-            spread(read_table(spark, sf_dir, "documents"))
-            .select("doc_id", "source", "lang", F.expr(TOKS).alias("t"))
-            .withColumn("dl", F.expr("size(t)"))
-            .persist()
-        )
-        per_session[sf_dir] = df
-    return df
+    return cached(
+        spark,
+        "tok",
+        sf_dir,
+        lambda: spread(read_table(spark, sf_dir, "documents"))
+        .select("doc_id", "source", "lang", F.expr(TOKS).alias("t"))
+        .withColumn("dl", F.expr("size(t)"))
+        .persist(),
+    )
 
 STOPWORDS = ("the", "a", "of", "and", "to", "in")
 

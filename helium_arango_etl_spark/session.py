@@ -14,13 +14,20 @@ Defaults chosen for correctness-at-scale first, local testing second:
 - ``spark.sql.shuffle.partitions`` kept modest for local[{N}] test runs; on a
   real cluster AQE's coalescing makes the static number mostly irrelevant,
   but we still set initialPartitionNum high so AQE can split heavy stages.
+
+Shared intermediate frames (witness edges, signatures, embeddings, token
+arrays, ...) are memoized per session by :func:`cached`, keyed on the
+input directory's file fingerprint so a rewritten input is never served
+stale.
 """
 
 from __future__ import annotations
 
 import os
+import weakref
+from typing import Any, Callable
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def get_spark(
@@ -60,3 +67,59 @@ def tune_for_scale(spark: SparkSession, target_bytes: int) -> None:
     spark.conf.set("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
     parts = max(32, target_bytes // (128 * 1024 * 1024))
     spark.conf.set("spark.sql.adaptive.coalescePartitions.initialPartitionNum", str(parts))
+
+
+# One memo table for the whole engine: session -> {(key, sf_dir): (fp, value)}.
+# WeakKey so a closed session's entries die with it.
+_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict]" = weakref.WeakKeyDictionary()
+
+
+def _fingerprint(sf_dir: str | None) -> tuple:
+    """(path, size, mtime_ns) of every file under ``sf_dir`` — pure
+    ``os.stat``, no Spark job.  Covers Spark-written tables (directories
+    of part files) as well as single parquet files."""
+    if sf_dir is None:
+        return ()
+    parts = []
+    for root, dirs, files in os.walk(sf_dir):
+        dirs.sort()
+        for f in sorted(files):
+            p = os.path.join(root, f)
+            try:
+                st = os.stat(p)
+                parts.append((p, st.st_size, st.st_mtime_ns))
+            except OSError:
+                parts.append((p, -1, -1))
+    return tuple(parts)
+
+
+def _release(value: Any) -> None:
+    if isinstance(value, DataFrame) and value.is_cached:
+        value.unpersist()
+
+
+def cached(spark: SparkSession, key: Any, sf_dir: str | None, build: Callable[[], Any]) -> Any:
+    """Return this session's memoized ``build()`` for ``(key, sf_dir)``.
+
+    An entry is reused only while the files under ``sf_dir`` keep the
+    fingerprint they had when it was built.  A lookup first unpersists and
+    drops every entry of ``sf_dir`` built under another fingerprint: Spark's
+    CacheManager would otherwise substitute a stale persisted frame into
+    any new plan over the same paths.  ``build`` persists its own result if
+    it is a DataFrame worth keeping resident.  ``sf_dir=None`` keys a value
+    that depends on no input files."""
+    per_session = _CACHE.setdefault(spark, {})
+    fp = _fingerprint(sf_dir)
+    for k in [k for k, (f, _) in per_session.items() if k[1] == sf_dir and f != fp]:
+        _release(per_session.pop(k)[1])
+    entry = per_session.get((key, sf_dir))
+    if entry is None:
+        entry = per_session[(key, sf_dir)] = (fp, build())
+    return entry[1]
+
+
+def clear_caches(spark: SparkSession) -> None:
+    """Drop every memoized entry of this session and unpersist the
+    persisted DataFrames among them."""
+    for _, value in _CACHE.pop(spark, {}).values():
+        _release(value)

@@ -7,6 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from helium_arango_etl_spark.operators.graph import city_graph_metrics, witness_subgraph
+from helium_arango_etl_spark.session import clear_caches
 
 
 @pytest.fixture(scope="module")
@@ -539,8 +540,7 @@ def test_exact_demo_guard_refuses_hub_corpus(spark, tmp_path, monkeypatch):
     ).write.parquet(sf + "/region.parquet")
 
     monkeypatch.delenv(G.ALLOW_EXACT_DEMO_ENV, raising=False)
-    G.clear_edge_cache(spark)
-    G._FANIN_CACHE.pop(spark, None)
+    clear_caches(spark)
     with _pytest.raises(RuntimeError, match="co_witness_pairs_capped"):
         G.co_witness_pairs(spark, sf)
     with _pytest.raises(RuntimeError, match="tip_decomposition_capped"):
@@ -551,8 +551,7 @@ def test_exact_demo_guard_refuses_hub_corpus(spark, tmp_path, monkeypatch):
 
     # explicit opt-in restores the demo (fresh caches so the guard re-runs)
     monkeypatch.setenv(G.ALLOW_EXACT_DEMO_ENV, "1")
-    G.clear_edge_cache(spark)
-    G._FANIN_CACHE.pop(spark, None)
+    clear_caches(spark)
     assert G.co_witness_pairs(spark, sf).count() == n
     G.clear_edge_cache(spark)
 

@@ -76,18 +76,14 @@ def test_city_metrics_single_shuffle(spark, sf_dir):
     """city_graph_metrics must shuffle exactly once (on city_key): the
     keep-latest dedup happens inside the pandas group, so a second
     window-style exchange is a regression."""
-    from helium_arango_etl_spark.operators import graph as G
+    from helium_arango_etl_spark.session import clear_caches
 
     # pin the UNCACHED build: registry calls serve a persisted combined
     # metrics table over a persisted edge table, so drop both cache
     # entries before reading the plan
-    for df in G._METRICS_CACHE.pop(spark, {}).values():
-        df.unpersist()
-    G.clear_edge_cache(spark)
+    clear_caches(spark)
     plan = plan_of(QUERIES["city_graph_metrics"](spark, sf_dir))
-    for df in G._METRICS_CACHE.pop(spark, {}).values():
-        df.unpersist()
-    G.clear_edge_cache(spark)
+    clear_caches(spark)
     # formatted mode: shuffle nodes print as "(N) Exchange"; broadcasts as
     # "(N) BroadcastExchange".  Exactly ONE keyed (hashpartitioning)
     # shuffle — the city_key one — may appear; the io.spread round-robin
@@ -890,104 +886,3 @@ def test_compaction_shards_single_keyed_window(spark, sf_dir):
     assert "Join" not in plan, plan
     assert "CartesianProduct" not in plan, plan
     assert plan.count("Window") == 2, plan  # one Window node
-
-
-def test_bench_host_signature_diagnostics():
-    """The bench harness's mechanized host-vs-plan verdict (VERDICT r8
-    #4): targets parse from BASELINE.md's CURRENT TARGETS table for
-    every headline query, a uniform inflation reads as host, a single
-    skewed sub-total query reads as plan-suspect, and near-target runs
-    read quiet.  No Spark needed — pure dict arithmetic."""
-    import importlib.util
-    import os
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    spec = importlib.util.spec_from_file_location(
-        "bench", os.path.join(repo, "bench.py")
-    )
-    bench = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(bench)
-
-    targets = bench._baseline_targets()
-    missing = [n for n in bench.HEADLINE if n not in targets]
-    assert not missing, f"headline queries without a BASELINE target: {missing}"
-    assert bench.PY_WORKER_QUERIES <= set(bench.HEADLINE)
-
-    headline_targets = {n: targets[n] for n in bench.HEADLINE}
-    quiet = bench._host_signature({n: v * 1.02 for n, v in headline_targets.items()})
-    assert quiet["verdict"] == "quiet", quiet
-
-    uniform = bench._host_signature({n: v * 1.4 for n, v in headline_targets.items()})
-    assert uniform["verdict"].startswith("host-inflated"), uniform
-    assert not uniform["plan_suspects"], uniform
-
-    degraded = {
-        n: v * (2.2 if n in bench.PY_WORKER_QUERIES else 1.3)
-        for n, v in headline_targets.items()
-    }
-    deg = bench._host_signature(degraded)
-    assert deg["verdict"].startswith("host-degraded"), deg
-
-    # VERDICT r9 #4: the pyworker bucket is judged against the SAME-RUN
-    # substrate fingerprint — a comparable substrate factor corroborates
-    # (host), a clean substrate makes the bucket a suspect in its own
-    # right, and the fingerprint is carried in the JSON either way
-    corroborated = bench._host_signature(
-        degraded,
-        substrate={
-            "loop10m_sec": 1.08,
-            "pandas_pyarrow_import_sec": 2.7,
-            "substrate_factor": 2.45,
-        },
-    )
-    assert "corroborates" in corroborated["verdict"], corroborated
-    assert corroborated["py_substrate"]["substrate_factor"] == 2.45
-    clean_sub = bench._host_signature(
-        degraded,
-        substrate={
-            "loop10m_sec": 0.45,
-            "pandas_pyarrow_import_sec": 1.0,
-            "substrate_factor": 0.91,
-        },
-    )
-    assert clean_sub["verdict"].startswith("pyworker-suspect"), clean_sub
-    # boundary guard (review find): a clean substrate near the branch
-    # boundary must NOT corroborate — the 1.3 floor, not 0.6*excess
-    # alone, decides (excess ~1.55 here, 0.6*excess = 0.93 < 0.94)
-    near_boundary = {
-        n: v * (1.85 if n in bench.PY_WORKER_QUERIES else 1.2)
-        for n, v in headline_targets.items()
-    }
-    nb = bench._host_signature(
-        near_boundary,
-        substrate={
-            "loop10m_sec": 0.47,
-            "pandas_pyarrow_import_sec": 0.57,
-            "substrate_factor": 0.94,
-        },
-    )
-    assert nb["verdict"].startswith("pyworker-suspect"), nb
-
-    # the live probe measures both fingerprints and derives the factor
-    live = bench._py_substrate()
-    assert live["loop10m_sec"] > 0
-    assert live["substrate_factor"] >= round(
-        live["loop10m_sec"] / bench.PY_LOOP_NOMINAL_S, 2
-    ) - 0.01
-    if live["pandas_pyarrow_import_sec"] is not None:
-        assert live["substrate_factor"] >= round(
-            live["pandas_pyarrow_import_sec"] / bench.PY_IMPORT_NOMINAL_S, 2
-        ) - 0.01
-
-    skewed = {n: v * 1.1 for n, v in headline_targets.items()}
-    skewed["city_ppr_joins"] = headline_targets["city_ppr_joins"] * 3.0
-    sk = bench._host_signature(skewed)
-    assert sk["verdict"] == "plan-suspect: city_ppr_joins", sk
-
-    # sub-0.5 s entries never become suspects (noise floor)
-    noisy = {n: v * 1.1 for n, v in headline_targets.items()}
-    noisy["exact_dedup"] = 0.4  # 2.4x its 0.166 s target, but tiny
-    nz = bench._host_signature(noisy)
-    assert nz["plan_suspects"] == [], nz
-
-    assert bench._host_signature({"unknown_query": 1.0}) == {"verdict": "no-baseline"}

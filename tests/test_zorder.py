@@ -160,8 +160,9 @@ def test_identity_salts_memoized_per_session(spark):
     run at most once per (session, n) however many zordered writes a
     session performs (VERDICT r5 #5)."""
     from helium_arango_etl_spark import io as io_mod
+    from helium_arango_etl_spark.session import clear_caches
 
-    io_mod._SALT_CACHE.pop(spark, None)
+    clear_caches(spark)
     first = io_mod._identity_salts(spark, 8)
     assert len(first) == 8
 
