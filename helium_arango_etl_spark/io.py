@@ -3,7 +3,7 @@
 The reference's sinks are ArangoDB ``importBulk`` calls with per-key conflict
 policies (reference: arango_queries.py:211-258):
 
-- ``onDuplicate='update'``  -> :func:`merge_upsert`   (last write wins per key)
+- ``onDuplicate='update'``  -> :func:`merge_upsert`   (last write wins per key and attribute)
 - ``onDuplicate='ignore'``  -> :func:`merge_ignore`   (first write wins per key)
 - AQL retention delete      -> :func:`apply_retention` (arango_queries.py:90-99)
 
@@ -255,11 +255,20 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
 
 
 def merge_upsert(old: DataFrame, new: DataFrame, key: str = "_key") -> DataFrame:
-    """Insert-or-replace by key: rows in ``new`` win over same-keyed ``old``.
+    """Insert-or-merge by key: a row in ``new`` replaces the attributes it
+    carries on the same-keyed ``old`` row and keeps the old values of the
+    columns ``new`` lacks; keys only in ``old`` survive unchanged.
 
     Reference: importBulk(onDuplicate='update'), arango_queries.py:222-227.
+    When ``new`` has every column of ``old`` (a full snapshot re-import)
+    the plan is a plain replace: no join carries anything over.
     """
     surviving_old = old.join(new.select(key), on=key, how="left_anti")
+    missing = [c for c in old.columns if c not in new.columns]
+    if missing:
+        new = new.join(old.select(key, *missing), on=key, how="left").select(
+            *new.columns, *missing
+        )
     return new.unionByName(surviving_old, allowMissingColumns=True)
 
 

@@ -12,8 +12,11 @@ J4  normalization ÷ city mean with nan→0 (arango_queries.py:169-175) —
 J6  MIN_CITY_SIZE threshold on raw edge count (arango_queries.py:159).
 
 Testdata mapping: hotspots→supplier, witnesses→customer (distinct node
-namespaces 'S<k>' / 'C<k>'), witness edges→lineitem⋈orders, city→supplier's
-nation, is_valid→(l_returnflag = 'N'), coords→deterministic synthetics.
+namespaces 'S<k>' / 'C<k>'), valid witness edges→lineitem⋈orders with
+l_returnflag = 'N', city→supplier's nation, coords→deterministic synthetics.
+``witness_subgraph`` is the one witness-edge definition: the sync cycle's
+witnesses collection, the metrics and every graph query read its persisted
+edge set, and ``witness_arcs`` is its distinct (city, src, dst) projection.
 
 Scale: the edge build is a fact-fact shuffle join on orderkey then a shuffle
 on city_key for the grouped metrics — two shuffles total, both on keys with
@@ -39,34 +42,34 @@ from ..session import cached, clear_caches
 MIN_CITY_SIZE = 5  # reference: etl.py:106-108 MIN_CITY_SIZE env, threshold on edge rows
 
 
-def witness_edges(
-    spark: SparkSession,
-    sf_dir: str,
-    valid_only: bool = False,
-    salt_orders: int | None = None,
-) -> DataFrame:
-    """Raw witness edge set with per-edge haversine distance (J1 before the
-    validity filter).  src = challengee hotspot ('S<suppkey>'), dst = witness
-    ('C<custkey>'), city = challengee's nation.
+# perfbench calls this name; it clears every cached entry of the session
+clear_edge_cache = clear_caches
 
-    ``valid_only`` applies the validity predicate AT THE SCAN (parquet
-    pushdown) before spreading — the is_valid column is still emitted
-    (constant true on surviving rows) so downstream filter/drop stays
-    uniform.
 
-    ``salt_orders``: when set, the one fact-fact shuffle (lineitem⋈orders
-    on orderkey) runs via operators.skew.salted_join with that many salts
-    — the deterministic skew path for a KNOWN hot orderkey (a challenge
-    with pathological fan-out), where one key's rows become ``salt_orders``
-    parallel tasks instead of a straggler.  Off by default: orderkeys are
-    near-uniform in the testdata and AQE's skew-join split covers the
-    runtime-detected case; results are identical either way
-    (tests/test_skew.py pins both properties on a mega-key fixture)."""
-    li = read_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_suppkey", "l_returnflag", "l_shipdate"
+# One persisted valid-edge table per (session, sf_dir): the witnesses
+# collection write, the combined metrics pass and every graph query are
+# consumers of the SAME edge set, so a sync cycle runs the fact-fact join
+# once (reference: etl.py imports the witnesses once per cycle and the
+# metrics read them back).  At cluster scale this persist is
+# MEMORY_AND_DISK by default — a production pipeline would write the edge
+# table to storage once per cycle instead.
+def witness_subgraph(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """J1: valid witness edges per city with haversine distance — the AQL
+    1-hop traversal (arango_queries.py:147-156) as one join DAG,
+    materialized once per (session, sf_dir).  src = challengee hotspot
+    ('S<suppkey>'), dst = witness ('C<custkey>'), city = challengee's
+    nation; columns city_key, src, dst, distance_m, edge_ts."""
+    return cached(spark, "edges", sf_dir, lambda: _build_witness_subgraph(spark, sf_dir))
+
+
+def _build_witness_subgraph(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # the validity predicate runs AT THE SCAN (parquet pushdown), before
+    # spreading
+    li = (
+        read_table(spark, sf_dir, "lineitem")
+        .select("l_orderkey", "l_suppkey", "l_returnflag", "l_shipdate")
+        .filter(F.col("l_returnflag") == "N")
     )
-    if valid_only:
-        li = li.filter(F.col("l_returnflag") == "N")
     # spread: the fact file scans as a handful of row groups locally, which
     # would run the per-edge trig on as many cores; a no-op on a well-split
     # 100 TB source (see io.spread)
@@ -94,57 +97,28 @@ def witness_edges(
         synthetic_lat(F.col("o_custkey")),
         synthetic_lon(F.col("o_custkey")),
     )
-    if salt_orders:
-        from .skew import salted_join
-
-        joined = salted_join(
-            li.withColumnRenamed("l_orderkey", "o_orderkey"),
-            orders,
-            "o_orderkey",
-            n_salts=salt_orders,
-        )
-    else:
-        joined = li.join(orders, li.l_orderkey == orders.o_orderkey)
+    # the one fact-fact shuffle (on orderkey); a hot orderkey is split at
+    # runtime by AQE's skew join
     return (
-        joined
+        li.join(orders, li.l_orderkey == orders.o_orderkey)
         .join(F.broadcast(sup), F.col("l_suppkey") == sup.s_suppkey)
         .join(F.broadcast(city_dim), sup.s_nationkey == city_dim.n_nationkey)
         .select(
             "city_key",
             F.concat(F.lit("S"), F.col("l_suppkey").cast("string")).alias("src"),
             F.concat(F.lit("C"), F.col("o_custkey").cast("string")).alias("dst"),
-            (F.col("l_returnflag") == "N").alias("is_valid"),
             F.round(dist, 3).alias("distance_m"),
             F.col("l_shipdate").alias("edge_ts"),
         )
+        .persist()
     )
 
 
-# perfbench calls this name; it clears every cached entry of the session
-clear_edge_cache = clear_caches
-
-
-# One persisted valid-edge table per (session, sf_dir): witness_subgraph,
-# the combined metrics pass, and the graph-skeleton oracles are all
-# consumers of the SAME edge set, and a real sync cycle materializes the
-# witness collection once (reference: etl.py builds it per cycle) rather
-# than re-running the fact-fact join per downstream query.  At cluster
-# scale this persist is MEMORY_AND_DISK by default — a production pipeline
-# would write the edge table to storage once per cycle instead.
-def witness_subgraph(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """J1: valid-only witness edges per city with distance — the AQL
-    1-hop traversal (arango_queries.py:147-156) as one join DAG,
-    materialized once per (session, sf_dir) and shared by every
-    downstream graph query."""
-    return cached(
-        spark,
-        "edges",
-        sf_dir,
-        lambda: witness_edges(spark, sf_dir, valid_only=True)
-        .filter(F.col("is_valid"))
-        .drop("is_valid")
-        .persist(),
-    )
+def witness_arcs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The distinct (city_key, src, dst) arcs of :func:`witness_subgraph`
+    (not cached itself: each consumer plans the distinct over the
+    persisted edges)."""
+    return witness_subgraph(spark, sf_dir).select("city_key", "src", "dst").distinct()
 
 
 _ALL_METRICS_SCHEMA = StructType(
@@ -242,7 +216,8 @@ def _build_city_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     # birthday collisions; an explicit count on repartition(col) is a
     # hard requirement AQE will not re-coalesce, and hash(city_key)
     # already satisfies applyInPandas' clustering, so no second
-    # exchange appears (plans/r11).  Scale-adaptive: derives from the
+    # exchange appears: FlatMapGroupsInPandas sits directly above the
+    # one city_key exchange.  Scale-adaptive: derives from the
     # cluster's core count, not a local constant.
     fanout = 4 * spark.sparkContext.defaultParallelism
     return edges.repartition(fanout, "city_key").groupBy("city_key").applyInPandas(
@@ -293,7 +268,7 @@ def city_graph_nodes(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Plan: the distinct-arc aggregation shuffles on (city, src, dst); the
     surviving-city filter broadcasts back (cities are a tiny domain)."""
-    arcs = witness_subgraph(spark, sf_dir).select("city_key", "src", "dst").distinct()
+    arcs = witness_arcs(spark, sf_dir)
     big = (
         arcs.groupBy("city_key")
         .agg(F.count(F.lit(1)).alias("n_arcs"))
@@ -421,9 +396,7 @@ def city_pagerank_joins(spark: SparkSession, sf_dir: str) -> DataFrame:
     textbook distributed PageRank data flow, no driver-side graph, no
     Python.  Every iteration localCheckpoints to truncate lineage.
     """
-    edges = (
-        witness_subgraph(spark, sf_dir).select("city_key", "src", "dst").distinct()
-    ).persist()
+    edges = witness_arcs(spark, sf_dir).persist()
     nodes = (
         edges.select("city_key", F.col("src").alias("node"))
         .unionByName(edges.select("city_key", F.col("dst").alias("node")))
@@ -488,9 +461,7 @@ def city_hits_joins(spark: SparkSession, sf_dir: str) -> DataFrame:
     normalizing scalar that broadcasts; 9dp quantization per step pins
     both engines to identical state.
     """
-    edges = (
-        witness_subgraph(spark, sf_dir).select("city_key", "src", "dst").distinct()
-    ).persist()
+    edges = witness_arcs(spark, sf_dir).persist()
     nodes = (
         edges.select("city_key", F.col("src").alias("node"))
         .unionByName(edges.select("city_key", F.col("dst").alias("node")))
@@ -557,9 +528,7 @@ def city_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql import Window
 
-    edges = (
-        witness_subgraph(spark, sf_dir).select("city_key", "src", "dst").distinct()
-    )
+    edges = witness_arcs(spark, sf_dir)
     und = (
         edges.select("city_key", F.col("src").alias("node"), F.col("dst").alias("nbr"))
         .unionByName(
@@ -782,9 +751,7 @@ def co_witness_bucket_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     largest fan-in, the exact pair count, and how many pairs a
     CO_WITNESS_MAX_GROUP-capped run generates vs drops.  Cheap by
     construction — sizes only, no pair materialization."""
-    edges = (
-        witness_subgraph(spark, sf_dir).select("city_key", "src", "dst").distinct()
-    )
+    edges = witness_arcs(spark, sf_dir)
     sizes = edges.groupBy("city_key", "dst").agg(F.count(F.lit(1)).alias("k"))
     m = CO_WITNESS_MAX_GROUP
     per = sizes.select(
@@ -851,9 +818,7 @@ def witness_graph_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: degree counts are combiner-folded keyed aggregations;
     the rollup is |cities| rows.
     """
-    edges = (
-        witness_subgraph(spark, sf_dir).select("city_key", "src", "dst").distinct()
-    )
+    edges = witness_arcs(spark, sf_dir)
     deg = (
         edges.select("city_key", F.col("src").alias("node"))
         .unionByName(edges.select("city_key", F.col("dst").alias("node")))
@@ -1291,9 +1256,7 @@ def city_betweenness_joins(spark: SparkSession, sf_dir: str) -> DataFrame:
     path's Brandes-Pich switch (functions/graphalgs.py).  Each level
     localCheckpoints to truncate lineage.
     """
-    edges = (
-        witness_subgraph(spark, sf_dir).select("city_key", "src", "dst").distinct()
-    )
+    edges = witness_arcs(spark, sf_dir)
     # bipartite (S* -> C*): the symmetric union cannot duplicate arcs
     und = edges.select(
         "city_key", F.col("src").alias("a"), F.col("dst").alias("b")
@@ -1421,9 +1384,7 @@ def witness_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql import Window
 
-    edges = (
-        witness_subgraph(spark, sf_dir).select("city_key", "src", "dst").distinct()
-    )
+    edges = witness_arcs(spark, sf_dir)
     und = edges.select(
         "city_key", F.col("src").alias("a"), F.col("dst").alias("b")
     ).unionByName(
@@ -1703,7 +1664,7 @@ def witness_edge_churn(spark: SparkSession, sf_dir: str) -> DataFrame:
     (city, src, dst) key the dedup pass uses), then a city-keyed rollup;
     the 1-row span broadcast is the only other input.
     """
-    edges = witness_edges(spark, sf_dir, valid_only=True).select(
+    edges = witness_subgraph(spark, sf_dir).select(
         # l_shipdate is TIMESTAMP_NTZ; session TZ is UTC so the cast is identity
         "city_key", "src", "dst",
         F.unix_micros(F.col("edge_ts").cast("timestamp")).alias("us"),
@@ -1760,9 +1721,7 @@ def _neighborhood_jaccard_body(
 ) -> DataFrame:
     """Jaccard scoring over an arbitrary co-witness pair table —
     shared by the exact and the capped registered forms."""
-    edges = (
-        witness_subgraph(spark, sf_dir).select("city_key", "src", "dst").distinct()
-    )
+    edges = witness_arcs(spark, sf_dir)
     deg = edges.groupBy("city_key", "src").agg(F.count(F.lit(1)).alias("d"))
     da = deg.select(
         "city_key", F.col("src").alias("src_a"), F.col("d").alias("deg_a")
@@ -1822,9 +1781,7 @@ def degree_powerlaw_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     the fit is a per-city aggregation of (count, micro-sum) — |cities|
     rows out.
     """
-    edges = (
-        witness_subgraph(spark, sf_dir).select("city_key", "src", "dst").distinct()
-    )
+    edges = witness_arcs(spark, sf_dir)
     deg = edges.groupBy("city_key", "src").agg(F.count(F.lit(1)).alias("d"))
     lnterm = (
         f"cast(round(ln(d / cast({PL_DMIN} - 0.5 as double)) * 1000000) as bigint)"
@@ -1872,9 +1829,7 @@ def _butterfly_stats_body(
 ) -> DataFrame:
     """Butterfly census over an arbitrary co-witness pair table —
     shared by the exact and the capped registered forms."""
-    edges = (
-        witness_subgraph(spark, sf_dir).select("city_key", "src", "dst").distinct()
-    )
+    edges = witness_arcs(spark, sf_dir)
     bf = pairs.groupBy("city_key").agg(
         F.sum(
             F.expr("shared_witnesses * (shared_witnesses - 1) div 2")
@@ -1947,9 +1902,7 @@ def node2vec_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql import Window
 
-    edges = (
-        witness_subgraph(spark, sf_dir).select("city_key", "src", "dst").distinct()
-    )
+    edges = witness_arcs(spark, sf_dir)
     und = edges.select(
         "city_key", F.col("src").alias("a"), F.col("dst").alias("b")
     ).unionByName(
@@ -2144,9 +2097,7 @@ def _witness_groups_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         "groups",
         sf_dir,
-        lambda: witness_subgraph(spark, sf_dir)
-        .select("city_key", "src", "dst")
-        .distinct()
+        lambda: witness_arcs(spark, sf_dir)
         .groupBy("city_key", "dst")
         .agg(F.sort_array(F.collect_list("src")).alias("ss"))
         .filter(F.size("ss") >= 2)
@@ -2267,12 +2218,7 @@ def _tip_body(
         _guard_exact_demo(
             spark, sf_dir, "tip_decomposition", "tip_decomposition_capped"
         )
-    edges = (
-        witness_subgraph(spark, sf_dir)
-        .select("city_key", "src", "dst")
-        .distinct()
-        .localCheckpoint()
-    )
+    edges = witness_arcs(spark, sf_dir).localCheckpoint()
     prev = edges.count()
     prev_ckpt = edges
     for _ in range(MAX_TIP_ITERS):
@@ -2541,12 +2487,7 @@ def city_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-city metric family (betweenness/pagerank) with the standard
     mixing metric the reference never shipped.
     """
-    edges = (
-        witness_subgraph(spark, sf_dir)
-        .select("city_key", "src", "dst")
-        .distinct()
-        .persist()
-    )
+    edges = witness_arcs(spark, sf_dir).persist()
     outdeg = edges.groupBy("city_key", "src").agg(
         F.count(F.lit(1)).cast("bigint").alias("od")
     )
@@ -2637,12 +2578,7 @@ def city_ppr_joins(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``df.checkpoint()`` (with ``spark.sparkContext.setCheckpointDir``)
     for such deployments, same loop shape.
     """
-    edges = (
-        witness_subgraph(spark, sf_dir)
-        .select("city_key", "src", "dst")
-        .distinct()
-        .localCheckpoint()
-    )
+    edges = witness_arcs(spark, sf_dir).localCheckpoint()
     nodes = (
         edges.select("city_key", F.col("src").alias("node"))
         .unionByName(edges.select("city_key", F.col("dst").alias("node")))
@@ -2947,14 +2883,10 @@ def city_bfs_layers(spark: SparkSession, sf_dir: str) -> DataFrame:
     the textbook Pregel/GraphX BFS expressed as joins, so the 100 TB
     form is the same plan with the edge table bucketed by city.
     """
-    edges = (
-        witness_subgraph(spark, sf_dir)
-        .select("city_key", "src", "dst")
-        .distinct()
-    )
+    edges = witness_arcs(spark, sf_dir)
     # the reversed copy cannot collide with the forward copy (src ids
     # are 'S'-prefixed suppliers, dst ids 'C'-prefixed customers —
-    # witness_edges construction), and each copy is distinct because
+    # witness_subgraph construction), and each copy is distinct because
     # edges is, so the union IS distinct: the former outer .distinct()
     # was a full extra shuffle of the doubled edge table for nothing
     # (round 10; guide §2.4 — a distinct on data that is already unique)
@@ -3071,11 +3003,7 @@ def _cowitness_lift_body(
     — shared by the exact and the capped registered forms.  Degrees and
     the witness census always come from the full edge set (the null
     model), only the observed pair weights vary with the projection."""
-    edges = (
-        witness_subgraph(spark, sf_dir)
-        .select("city_key", "src", "dst")
-        .distinct()
-    )
+    edges = witness_arcs(spark, sf_dir)
     deg = edges.groupBy("city_key", "src").agg(
         F.count(F.lit(1)).cast("bigint").alias("d")
     )

@@ -1736,9 +1736,10 @@ def markov_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     # unbounded windows over the |channels|+1-row start table instead of
     # crossJoin(broadcast(agg)) — the round-10 form consumed `starts` and
     # `scored` twice each, so the absorption fold and its three keyed
-    # aggregations executed TWICE in the final job (plans/r11: 20 -> 10
-    # exchanges).  Values unchanged: the window max picks the unique
-    # 'full' row, the window sum is the same exact bigint total.
+    # aggregations executed TWICE in the final job (20 exchanges in the
+    # final plan; 10 in this form).  Values unchanged: the window max
+    # picks the unique 'full' row, the window sum is the same exact
+    # bigint total.
     w_all = Window.partitionBy(F.lit(1))
     scored = (
         starts.withColumn(

@@ -44,7 +44,7 @@ from pyspark.sql import functions as F
 
 from ..functions.scalars import arango_id, content_key, synthetic_lat, synthetic_lon
 from ..io import compact_parquet, fresh_rows, merge_upsert, read_table
-from ..operators.graph import witness_edges
+from ..operators.graph import witness_subgraph
 from ..operators.windows import daily_balances_nested
 
 COLLECTIONS = ("accounts", "hotspots", "cities", "balances", "payments", "witnesses")
@@ -147,11 +147,13 @@ def build_payments(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def build_witnesses(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """witnesses edges: valid-only, keep-latest per (src,dst) pair (E1),
-    _key = md5(challengee+witness) (blockchain_queries.py:306)."""
+    """witnesses edges: the session's persisted valid edge set
+    (``witness_subgraph``, which the metrics writeback reads too),
+    keep-latest per (src,dst) pair (E1), _key = md5(challengee+witness)
+    (blockchain_queries.py:306)."""
     from pyspark.sql import Window
 
-    edges = witness_edges(spark, sf_dir, valid_only=True).filter(F.col("is_valid"))
+    edges = witness_subgraph(spark, sf_dir)
     w = Window.partitionBy("src", "dst").orderBy(F.col("edge_ts").desc(), F.col("distance_m").desc())
     return (
         edges.withColumn("rn", F.row_number().over(w))

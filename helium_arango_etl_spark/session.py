@@ -12,8 +12,7 @@ Defaults chosen for correctness-at-scale first, local testing second:
   timezone-aware timestamps (blockchain_tables.py:123, 196); pinning avoids
   local-tz drift between engines and between executors.
 - ``spark.sql.shuffle.partitions`` kept modest for local[{N}] test runs; on a
-  real cluster AQE's coalescing makes the static number mostly irrelevant,
-  but we still set initialPartitionNum high so AQE can split heavy stages.
+  real cluster AQE's coalescing makes the static number mostly irrelevant.
 
 Shared intermediate frames (witness edges, signatures, embeddings, token
 arrays, ...) are memoized per session by :func:`cached`, keyed on the
@@ -55,18 +54,6 @@ def get_spark(
         .config("spark.ui.enabled", "false")
     )
     return builder.getOrCreate()
-
-
-def tune_for_scale(spark: SparkSession, target_bytes: int) -> None:
-    """Adjust partition sizing for a known input volume.
-
-    At 100 TB the defaults that matter are max partition bytes (scan split
-    size) and the AQE advisory target; both keep per-task memory bounded so
-    shuffles spill predictably instead of OOMing.
-    """
-    spark.conf.set("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
-    parts = max(32, target_bytes // (128 * 1024 * 1024))
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.initialPartitionNum", str(parts))
 
 
 # One memo table for the whole engine: session -> {(key, sf_dir): (fp, value)}.

@@ -540,6 +540,28 @@ def test_ndcg_rides_tokenized_corpus_cache(spark, sf_dir):
     assert "documents.parquet" not in plan.split("InMemoryRelation")[0], plan
 
 
+def test_sync_cycle_builds_witness_edges_once(spark, sf_dir):
+    """The witnesses write and the metrics writeback of one cycle both
+    scan the session's persisted witness_subgraph: its InMemoryRelation
+    (matched by its output attributes) is in each plan, and the one
+    lineitem scan in each is that relation's own build — the fact-fact
+    join never runs a second time."""
+    from helium_arango_etl_spark.operators.graph import (
+        hotspot_metrics_writeback,
+        witness_subgraph,
+    )
+    from helium_arango_etl_spark.plans.sync import build_witnesses
+
+    edges = re.search(
+        r"\(\d+\) InMemoryRelation\nArguments: ([^\n]*)",
+        plan_of(witness_subgraph(spark, sf_dir)),
+    ).group(1)
+    for build in (build_witnesses, hotspot_metrics_writeback):
+        plan = plan_of(build(spark, sf_dir))
+        assert edges in plan, plan
+        assert plan.count("lineitem.parquet") == 1, plan
+
+
 def test_hybrid_rrf_operates_on_bounded_inputs(spark, sf_dir):
     """Both fused rankings are TakeOrderedAndProject-bounded before the
     full-outer fusion — the fusion join never sees corpus-sized input."""

@@ -39,55 +39,3 @@ def test_hot_key_actually_spreads(spark):
     assert len(buckets) == 8  # the single hot key occupies every salt bucket
     assert max(r["count"] for r in buckets) < 1000 * 0.4  # no bucket dominates
 
-
-def test_salted_witness_edge_build(spark, tmp_path):
-    """The salted path of the witness edge build (graph.witness_edges
-    salt_orders=N) on a constructed mega-orderkey fixture: one orderkey
-    carries 90% of the lineitem rows.  The salted join must (a) produce
-    byte-identical edges to the plain join, and (b) actually spread the
-    hot key's output across salt buckets instead of one straggler task."""
-    import datetime
-
-    from helium_arango_etl_spark.operators.graph import witness_edges
-    from helium_arango_etl_spark.operators.skew import SALT_COL, salt_big_side
-
-    sf = str(tmp_path)
-    n = 2000
-    rows = [
-        (
-            1 if i % 10 < 9 else i,          # hot l_orderkey = 1
-            (i % 50) + 1,                    # l_suppkey
-            "N" if i % 4 else "R",
-            datetime.datetime(2024, 1, 1 + (i % 28)),
-        )
-        for i in range(n)
-    ]
-    spark.createDataFrame(
-        rows, "l_orderkey long, l_suppkey long, l_returnflag string, l_shipdate timestamp"
-    ).write.parquet(sf + "/lineitem.parquet")
-    spark.createDataFrame(
-        [(k, (k * 7) % 100 + 1) for k in {r[0] for r in rows}],
-        "o_orderkey long, o_custkey long",
-    ).write.parquet(sf + "/orders.parquet")
-    spark.createDataFrame(
-        [(s, s % 5) for s in range(1, 51)], "s_suppkey long, s_nationkey long"
-    ).write.parquet(sf + "/supplier.parquet")
-    spark.createDataFrame(
-        [(k, f"NATION{k}", k % 2) for k in range(5)],
-        "n_nationkey long, n_name string, n_regionkey long",
-    ).write.parquet(sf + "/nation.parquet")
-    spark.createDataFrame(
-        [(0, "R0"), (1, "R1")], "r_regionkey long, r_name string"
-    ).write.parquet(sf + "/region.parquet")
-
-    plain = witness_edges(spark, sf, valid_only=True)
-    salted = witness_edges(spark, sf, valid_only=True, salt_orders=8)
-    assert _rows(plain) == _rows(salted)
-
-    # straggler check at the join's shuffle granularity: the hot key's
-    # rows must occupy every salt bucket, none dominating
-    hot = spark.read.parquet(sf + "/lineitem.parquet").filter("l_orderkey = 1")
-    buckets = salt_big_side(hot, 8).groupBy(SALT_COL).count().collect()
-    assert len(buckets) == 8
-    hot_n = sum(r["count"] for r in buckets)
-    assert max(r["count"] for r in buckets) < hot_n * 0.4

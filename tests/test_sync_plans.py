@@ -95,6 +95,40 @@ def test_merge_array_append(spark):
     assert got == {"a": [1, 2], "b": [3, 4, 5], "c": [6]}
 
 
+def test_partial_upsert_merges_attributes(spark, tmp_path):
+    """A5: importBulk(onDuplicate='update') merges by _key — an upsert
+    that carries only some columns replaces those and keeps the stored
+    values of the rest; a new key gets nulls for what it lacks."""
+    out = str(tmp_path / "store")
+    old = spark.createDataFrame(
+        [("a", "x", 1.0), ("b", "y", 2.0)], "_key string, name string, score double"
+    )
+    _write_merged(spark, out, "docs", old, "upsert")
+    new = spark.createDataFrame([("b", 9.0), ("c", 3.0)], "_key string, score double")
+    _write_merged(spark, out, "docs", new, "upsert")
+    got = {r["_key"]: (r["name"], r["score"]) for r in read_collection(spark, out, "docs").collect()}
+    assert got == {"a": ("x", 1.0), "b": ("y", 9.0), "c": (None, 3.0)}
+
+
+def test_metrics_upsert_keeps_hotspot_attributes(spark, sf_dir, tmp_path):
+    """The metrics writeback upserted onto synced hotspots lacks the
+    nested location/geo columns and the balance; they must survive."""
+    from helium_arango_etl_spark.io import merge_upsert
+    from helium_arango_etl_spark.operators.graph import hotspot_metrics_writeback
+
+    out = str(tmp_path / "store")
+    sync_inventories(spark, sf_dir, out)
+    wb = hotspot_metrics_writeback(spark, sf_dir)
+    merged = merge_upsert(
+        read_collection(spark, out, "hotspots"),
+        wb.withColumn("_key", wb["address"].cast("string")),
+    )
+    assert merged.count() == build_hotspots(spark, sf_dir).count()
+    for c in ("location_details", "geo_location", "balance"):
+        assert merged.filter(F.col(c).isNull()).count() == 0, c
+    assert merged.filter(F.col("pagerank").isNotNull()).count() > 0
+
+
 def test_partitioned_retention_drop(spark, sf_dir, tmp_path):
     """A7/L3 at scale: partition-drop retention equals the row-level filter
     without reading or rewriting surviving data."""
