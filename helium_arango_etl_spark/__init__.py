@@ -20,7 +20,8 @@ Layout
                  dedup, similarity, text analysis, multimodal.
 - ``plans``      end-to-end DAGs mirroring the reference's entry points
                  (inventory sync, payments backfill, witness import).
-- ``streaming``  incremental follower semantics via Structured Streaming.
+- ``streaming``  the incremental block follower (``streaming.follower``:
+                 availableNow backfill, processingTime polling, checkpoint).
 - ``registry``   name -> (spark callable, oracle SQL) for the driver contract.
 """
 

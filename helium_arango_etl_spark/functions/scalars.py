@@ -31,13 +31,6 @@ def arango_id(collection: str, key: Column | str) -> Column:
     return F.concat(F.lit(collection + "/"), key_col.cast("string"))
 
 
-def strip_collection(doc_id: Column | str) -> Column:
-    """Inverse of :func:`arango_id` — AQL ``LAST(SPLIT(id,'/'))``
-    (arango_queries.py:153)."""
-    c = F.col(doc_id) if isinstance(doc_id, str) else doc_id
-    return F.element_at(F.split(c, "/"), -1)
-
-
 EARTH_RADIUS_M = 6371008.8
 
 
@@ -68,12 +61,6 @@ def synthetic_lat(key: Column) -> Column:
 def synthetic_lon(key: Column) -> Column:
     """Deterministic pseudo-longitude in (-180, 180) from an integer key."""
     return (F.pmod(key.cast("bigint") * F.lit(91), F.lit(360)) - F.lit(180)).cast("double")
-
-
-def nan_to_zero(c: Column) -> Column:
-    """Reference: ``0 if isnan(x) else x`` on centrality values
-    (arango_queries.py:136, 171-174)."""
-    return F.nanvl(c, F.lit(0.0))
 
 
 def end_of_day_ts(ts: Column) -> Column:

@@ -276,16 +276,60 @@ def cuped_adjustment(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def decayed_engagement_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Day-bucketed decayed engagement — the batch twin of the streaming
-    state (`streaming/decay.py`): contributions bucket to integer days so
-    the decay factor depends only on integer day deltas, which is what
-    lets the streamed score equal this one BIT-FOR-BIT (the exact-ts form
-    is :func:`decayed_user_engagement`; the bucketed form trades sub-day
-    decay resolution for mergeable O(users x days) state).
-    """
-    from ..streaming.decay import batch_day_sums, scores_from_day_sums
+DAY_US = 86_400 * 1_000_000
+# half-life in DAYS for the bucketed form (DECAY_HL_US is 7 days)
+DECAY_HL_DAYS = DECAY_HL_US // DAY_US
 
+
+def batch_day_sums(events: DataFrame) -> DataFrame:
+    """Fold events to their (user_id, day, cents, n_events, last_us)
+    sums — exact integers only."""
+    return (
+        events.select(
+            "user_id",
+            F.unix_micros("ts").alias("us"),
+            F.expr("cast(floor(value * 100) as bigint)").alias("cents"),
+        )
+        .withColumn("day", F.expr(f"us div {DAY_US}"))
+        .groupBy("user_id", "day")
+        .agg(
+            F.sum("cents").alias("cents"),
+            F.count(F.lit(1)).cast("bigint").alias("n_events"),
+            F.max("us").alias("last_us"),
+        )
+    )
+
+
+def scores_from_day_sums(day_sums: DataFrame) -> DataFrame:
+    """Decayed score per user from a (user, day, cents, ...) table: each
+    day's cents decay by 2^(-(anchor_day - day)/HL_DAYS), every term
+    rounds to integer micro-dollars before the exact-bigint per-user
+    sum."""
+    anchor = day_sums.agg(F.max("day").alias("anchor_day"))
+    term = (
+        "cast(round(cents * pow(2.0,"
+        f" -(cast(anchor_day - day as double) / {DECAY_HL_DAYS})) * 10000) as bigint)"
+    )
+    return (
+        day_sums.crossJoin(F.broadcast(anchor))
+        .select("user_id", "n_events", "last_us", F.expr(term).alias("tm"))
+        .groupBy("user_id")
+        .agg(
+            F.round(F.sum("tm") / 1e6, 6).alias("decayed_value"),
+            F.sum("n_events").cast("bigint").alias("n_events"),
+            F.max("last_us").alias("last_seen_us"),
+        )
+        .select("user_id", "decayed_value", "n_events", "last_seen_us")
+    )
+
+
+def decayed_engagement_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Day-bucketed decayed engagement: contributions bucket to integer
+    days, so the decay factor depends only on integer day deltas and the
+    (user, day) cent sums are exact bigints merged by addition (the
+    exact-ts form is :func:`decayed_user_engagement`; the bucketed form
+    trades sub-day decay resolution for mergeable O(users x days) state).
+    """
     return scores_from_day_sums(batch_day_sums(read_table(spark, sf_dir, "events")))
 
 

@@ -1306,9 +1306,9 @@ def key_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pre-join skew diagnostic over the join-key columns this engine
     shuffles on: rows, distinct keys, the heaviest key's count, the
     skew factor max/avg = max·d/n (1.0 = uniform), and the top-1 key's
-    row share — the report that decides WHERE salting
-    (operators/skew.salted_join) or AQE skew splitting is worth wiring
-    in, instead of discovering the straggler at 3am.
+    row share — the report that decides WHERE key salting or AQE skew
+    splitting is worth wiring in, instead of discovering the straggler
+    at 3am.
 
     Determinism: all counts exact; skew factor is max·d/n computed as
     one rounded division of exact integers.

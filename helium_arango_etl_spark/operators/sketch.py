@@ -36,8 +36,8 @@ HLL_ALPHA = 0.709  # alpha_64 (Flajolet et al. 2007, table for m = 64)
 
 CMS_D = 4  # count-min hash rows
 CMS_W = 64  # count-min columns per row
-# cell assignment shared by the batch sketch and the streaming consumer
-# (streaming/cms.py): row d + token -> column via a 28-bit md5 prefix
+# cell assignment: row d + token -> column via a 28-bit md5 prefix, so
+# counter tables built on disjoint inputs merge by cell-wise addition
 CMS_CELL_EXPR = (
     "cast(conv(substring(md5(concat(d, '|', token)), 1, 7), 16, 10) as bigint)"
     f" % {CMS_W}"

@@ -2041,13 +2041,10 @@ def interval_overlap_hours(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def running_balance_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-user lifetime event totals — the ORACLED BATCH TWIN of the
-    custom stateful streaming operator ``streaming/stateful.running_balance``
-    (applyInPandasWithState): the stream's converged per-user state after
-    all micro-batches must equal this one keyed aggregation (the
-    equivalence tests/test_stateful_streaming.py pins with tolerance; this
-    registered form is the exact-integer driver-certifiable surface —
-    money summed as DECIMAL(18,2), last activity as epoch micros).
+    """Per-user lifetime event totals — the converged state a per-user
+    running-balance stream reaches after all micro-batches, as one keyed
+    aggregation in exact-integer driver-certifiable form (money summed as
+    DECIMAL(18,2), last activity as epoch micros).
 
     Scale shape: one combiner-folded groupBy on user_id; no joins.
     """

@@ -2319,9 +2319,9 @@ ORACLE_TRAINING["cuped_adjustment"] = """
     """
 
 
-# ---------- day-bucketed decayed engagement (streaming twin) ----------
+# ---------- day-bucketed decayed engagement ----------
 
-from .streaming.decay import DAY_US, DECAY_HL_DAYS  # noqa: E402
+from .operators.rangeops import DAY_US, DECAY_HL_DAYS  # noqa: E402
 
 ORACLE_TRAINING["decayed_engagement_daily"] = f"""
         WITH ev AS (

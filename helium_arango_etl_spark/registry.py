@@ -1330,7 +1330,12 @@ def _betweenness_sql() -> str:
     """Unrolled Brandes mirror of G.city_betweenness_joins: BFS levels
     v0..vL with bigint sigma, backward deltas in integer nano-units
     (per-term CAST(round(..) AS BIGINT) before SUM, so every aggregate is
-    exact integer arithmetic, matching the Spark side bit-for-bit)."""
+    exact integer arithmetic, matching the Spark side bit-for-bit).
+
+    Each frontier v{l} is read by the next level, by vis{l}, sc{l} and
+    d{l}; DuckDB inlines a CTE at every reference unless it is declared
+    MATERIALIZED, so without it the plan grows exponentially in BC_LEVELS
+    (out of memory at sf0.001)."""
     L, K, SC = G.BC_LEVELS, G.BC_SRC_K, float(G.BC_SCALE)
     parts = [f"""
         WITH edges0 AS ({_WITNESS_SQL}),
@@ -1360,7 +1365,7 @@ def _betweenness_sql() -> str:
           SELECT u.city_key, f.s, u.b AS v, CAST(sum(f.sigma) AS BIGINT) AS sigma
           FROM v{l - 1} f JOIN und u ON u.city_key = f.city_key AND u.a = f.v
           GROUP BY u.city_key, f.s, u.b
-        ), v{l} AS (
+        ), v{l} AS MATERIALIZED (
           SELECT g.city_key, g.s, g.v, {l} AS dist, g.sigma FROM g{l} g
           WHERE NOT EXISTS (
             SELECT 1 FROM vis{l - 1} x

@@ -294,31 +294,3 @@ def test_run_parity_merge_matches_fold(spark, words, pair):
     )
     for r in merged.collect():
         assert r["m"] == _greedy_merge(list(r["w"]), a, b), (r["w"], a, b, r["m"])
-
-
-@given(
-    stream=st.lists(st.integers(min_value=0, max_value=30), max_size=400),
-    capacity=st.integers(min_value=2, max_value=12),
-)
-@settings(max_examples=200, deadline=None)
-def test_space_saving_sketch_guarantees(stream, capacity):
-    """Space-Saving invariants against exact counts on random streams:
-    overestimate-only, error-bounded below, table bounded by capacity,
-    and any key with true frequency > N/capacity is guaranteed present
-    (Metwally et al. 2005, Theorem 3)."""
-    from collections import Counter
-
-    from helium_arango_etl_spark.streaming.topk import _space_saving_fold
-
-    table: dict[int, tuple[int, int]] = {}
-    for k in stream:
-        _space_saving_fold(table, k, 1, capacity)
-    truth = Counter(stream)
-    assert len(table) <= capacity
-    n = len(stream)
-    for k, (est, err) in table.items():
-        assert est >= truth[k]
-        assert est - err <= truth[k]
-    for k, true_c in truth.items():
-        if true_c > n / capacity:
-            assert k in table, (k, true_c, n, capacity)

@@ -154,63 +154,6 @@ def test_ann_batch_topk_consistent_with_single_query(spark, sf_dir):
     ]
 
 
-def test_quantile_sketch_merges_across_splits(spark, sf_dir):
-    """The sketch's reason to exist is mergeability: bucket histograms
-    built on disjoint halves of the data, summed cell-wise, must yield
-    the IDENTICAL quantile estimates as one pass over the whole — the
-    property that lets a 100 TB rollup (or a streaming foreachBatch)
-    keep one bounded counter table per group instead of value multisets."""
-    from pyspark.sql import Window, functions as F
-
-    from helium_arango_etl_spark.io import read_table
-    from helium_arango_etl_spark.registry import QUERIES
-
-    from helium_arango_etl_spark.streaming.quantiles import (
-        _BUCKET_UB,
-        batch_buckets,
-        merge_buckets,
-    )
-
-    ev = read_table(spark, sf_dir, "events").select("event_type", "value", "event_id")
-
-    # disjoint halves -> per-half histograms -> cell-wise merge (the
-    # shared streaming helpers ARE the batch bucketing, underflow incl.)
-    merged = merge_buckets(
-        batch_buckets(ev.filter(F.col("event_id") % 2 == 0)),
-        batch_buckets(ev.filter(F.col("event_id") % 2 == 1)),
-    ).withColumn("ub", F.expr(_BUCKET_UB))
-    w_cum = (
-        Window.partitionBy("event_type")
-        .orderBy("b", "sub")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    cum = merged.withColumn("cum", F.sum("cnt").over(w_cum)).withColumn(
-        "n", F.sum("cnt").over(Window.partitionBy("event_type"))
-    )
-    est = [
-        F.round(
-            F.min(
-                F.when(
-                    F.col("cum") >= F.expr(f"cast(ceiling({q} * n) as bigint)"),
-                    F.col("ub"),
-                )
-            )
-            / 100.0,
-            2,
-        ).alias(f"est_p{int(q * 100)}")
-        for q in (0.5, 0.9, 0.99)
-    ]
-    from_merge = {
-        r["event_type"]: (r["est_p50"], r["est_p90"], r["est_p99"])
-        for r in cum.groupBy("event_type").agg(*est).collect()
-    }
-    one_pass = {
-        r["event_type"]: (r["est_p50"], r["est_p90"], r["est_p99"])
-        for r in QUERIES["value_quantile_sketch"](spark, sf_dir).collect()
-    }
-    assert from_merge == one_pass
-
-
 def test_scd2_intervals_partition_the_timeline(spark, sf_dir):
     """SCD2 invariants: per user, version 1..k dense, exactly one open
     (is_current) interval, intervals abut exactly (valid_to == next
