@@ -1,5 +1,12 @@
 """Table I/O: parquet readers and keyed sinks.
 
+Every engine parquet read takes its schema from one footer, no inference
+job: :func:`parquet_schema` reads a single footer on the driver and the
+read passes it to ``spark.read.schema(...)``, so building the frame runs
+no Spark job.  A file Spark wrote records its exact row schema in that
+footer, which is what a file source needs (the discipline Structured
+Streaming imposes on file sources), so no sidecar is kept.
+
 The reference's sinks are ArangoDB ``importBulk`` calls with per-key conflict
 policies (reference: arango_queries.py:211-258):
 
@@ -48,10 +55,12 @@ the partition-drop form implemented here.
 
 from __future__ import annotations
 
+import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from .session import cached
 
@@ -69,8 +78,121 @@ TABLES = (
 )
 
 
+# Spark's parquet writer records the row schema it wrote under this footer key
+_SPARK_ROW_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _parquet_files(path: str):
+    """The data files Spark reads for ``path``, in sorted order: ``path``
+    itself, or every file under it except names that start with ``_`` or
+    ``.`` (``_SUCCESS``, ``.crc`` checksums)."""
+    if not os.path.isdir(path):
+        yield path
+        return
+    for root, dirs, files in os.walk(path):
+        dirs[:] = sorted(d for d in dirs if not d.startswith(("_", ".")))
+        for f in sorted(files):
+            if not f.startswith(("_", ".")):
+                yield os.path.join(root, f)
+
+
+# Spark's type for a parquet column without a logical type; INT96 is the
+# legacy timestamp encoding
+_UNANNOTATED = {
+    "BOOLEAN": T.BooleanType(),
+    "INT32": T.IntegerType(),
+    "INT64": T.LongType(),
+    "INT96": T.TimestampType(),
+    "FLOAT": T.FloatType(),
+    "DOUBLE": T.DoubleType(),
+    "BYTE_ARRAY": T.BinaryType(),
+    "FIXED_LEN_BYTE_ARRAY": T.BinaryType(),
+}
+# an unsigned int widens to the next signed type, 64 bits to decimal(20, 0)
+_INTS = {
+    True: {8: T.ByteType(), 16: T.ShortType(), 32: T.IntegerType(), 64: T.LongType()},
+    False: {8: T.ShortType(), 16: T.IntegerType(), 32: T.LongType(), 64: T.DecimalType(20, 0)},
+}
+
+
+def _leaf_type(col) -> T.DataType:
+    """Spark type of one parquet leaf column, decided from its physical and
+    logical types as Spark's ``ParquetToSparkSchemaConverter`` does with
+    default settings (``nanosAsLong`` on, ``binaryAsString`` off).  The
+    Arrow type alone would mislead: INT96 shows as ``timestamp[ns]`` but
+    Spark reads it as a timestamp, not as a long."""
+    logical = json.loads(col.logical_type.to_json())
+    kind = logical["Type"]
+    if kind == "None":
+        return _UNANNOTATED[col.physical_type]
+    if kind == "Decimal":
+        return T.DecimalType(col.precision, col.scale)
+    if kind in ("String", "Enum", "JSON"):
+        return T.StringType()
+    if kind == "BSON":
+        return T.BinaryType()
+    if kind == "Date":
+        return T.DateType()
+    if kind == "Int":
+        return _INTS[logical["isSigned"]][logical["bitWidth"]]
+    if kind == "Timestamp":
+        if logical["timeUnit"] == "nanoseconds":
+            return T.LongType()
+        return T.TimestampType() if logical["isAdjustedToUTC"] else T.TimestampNTZType()
+    raise ValueError(f"parquet column {col.path}: no Spark type for {col.physical_type} {kind}")
+
+
+def _spark_type(arrow_type, leaves) -> T.DataType:
+    """Spark type of one Arrow field: nesting from the Arrow type, each leaf
+    from the next parquet column of ``leaves`` (depth-first order)."""
+    import pyarrow as pa
+
+    if pa.types.is_struct(arrow_type):
+        return T.StructType(
+            [T.StructField(f.name, _spark_type(f.type, leaves), f.nullable) for f in arrow_type]
+        )
+    if pa.types.is_map(arrow_type):
+        key = _spark_type(arrow_type.key_type, leaves)
+        return T.MapType(key, _spark_type(arrow_type.item_type, leaves), arrow_type.item_field.nullable)
+    if pa.types.is_list(arrow_type) or pa.types.is_large_list(arrow_type):
+        element = arrow_type.value_field
+        return T.ArrayType(_spark_type(element.type, leaves), element.nullable)
+    return _leaf_type(next(leaves))
+
+
+def parquet_schema(path: str) -> T.StructType:
+    """The schema ``spark.read.parquet(path)`` would infer, from one footer
+    read on the driver and no Spark job.
+
+    A file Spark wrote records its row schema in the footer, which is
+    returned as is.  Any other file's schema is mapped from its parquet
+    types (see :func:`_leaf_type`).  For a directory the footer is that of
+    its first data file, the same one Spark reads with ``mergeSchema`` off.
+    ``path`` is a local path.
+    """
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    first = next(_parquet_files(os.fspath(path)), None)
+    if first is None:
+        raise FileNotFoundError(f"no parquet data file under {path} to take a schema from")
+    meta = pq.read_metadata(first)
+    spark_schema = (meta.metadata or {}).get(_SPARK_ROW_SCHEMA_KEY)
+    if spark_schema is not None:
+        return T.StructType.fromJson(json.loads(spark_schema))
+    leaves = (meta.schema.column(i) for i in range(meta.num_columns))
+    return _spark_type(pa.struct(list(meta.schema.to_arrow_schema())), leaves)
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` with the schema pinned by
+    :func:`parquet_schema`, so building the frame runs no Spark job."""
+    return spark.read.schema(parquet_schema(path)).parquet(path)
+
+
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Scan one parquet table from a scale-factor directory.
+    """Scan one parquet table from a scale-factor directory: schema from
+    one footer, no inference job (:func:`read_parquet`).
 
     Reference analog: the SQLAlchemy ORM table scan (blockchain_queries.py:44,
     74).  Predicate pushdown and column pruning into the parquet scan are
@@ -83,7 +205,7 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     same value DuckDB yields for either physical type.
     """
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    df = read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
     if name == "events":
         df = normalize_event_ts(df)
     return df
@@ -502,14 +624,17 @@ def compact_parquet(
 
     Row-count-based sizing (not byte-based) keeps the operation
     deterministic and engine-portable; callers with wildly variable row
-    widths should derive target_rows from their schema.  Returns the
-    number of files written.  Uses coalesce (no shuffle) when reducing,
-    repartition when the source is under-split.
+    widths should derive target_rows from their schema.  The row count is
+    summed from the data files' footers, so no Spark job runs before the
+    write.  Returns the number of files written.  Uses coalesce (no
+    shuffle) when reducing, repartition when the source is under-split.
     """
     import math
 
-    df = spark.read.parquet(path)
-    n = df.count()
+    import pyarrow.parquet as pq
+
+    df = read_parquet(spark, path)
+    n = sum(pq.read_metadata(f).num_rows for f in _parquet_files(path))
     files = max(1, math.ceil(n / target_rows))
     cur = df.rdd.getNumPartitions()
     out = df.coalesce(files) if cur >= files else df.repartition(files)

@@ -1948,6 +1948,8 @@ from .operators.similarity import MMR_CANDS, MMR_K  # noqa: E402
 
 
 def _mmr_sql() -> str:
+    # cand, pairs and each sel{k} are read by every later step: materialized,
+    # or DuckDB re-evaluates the whole greedy chain per reference
     micro_qc = f"CAST(round({_COSINE} * 1000000) AS BIGINT)"
     pdot = f"list_sum(list_transform(range(1, {DIM + 1}), i -> a.v[i] * b.v[i]))"
     pcos = f"round({pdot} / (a.nv * b.nv), 6)"
@@ -1959,7 +1961,7 @@ def _mmr_sql() -> str:
           FROM embeddings
         ), q AS (
           SELECT vec_id AS q_id, v AS va FROM e WHERE vec_id < {NUM_QUERIES}
-        ), cand AS (
+        ), cand AS MATERIALIZED (
           SELECT q_id, vec_id, rel_micro FROM (
             SELECT q.q_id, c.vec_id, {micro_qc} AS rel_micro,
                    row_number() OVER (PARTITION BY q.q_id
@@ -1970,12 +1972,12 @@ def _mmr_sql() -> str:
                         FROM q) q
             WHERE {micro_qc} IS NOT NULL
           ) WHERE rk <= {MMR_CANDS}
-        ), pairs AS (
+        ), pairs AS MATERIALIZED (
           SELECT a.q_id, a.vec_id AS ia, b.vec_id AS ib, {micro_pp} AS sim_micro
           FROM (SELECT c.q_id, c.vec_id, e.v, e.nv FROM cand c JOIN e USING (vec_id)) a
           JOIN (SELECT c.q_id, c.vec_id, e.v, e.nv FROM cand c JOIN e USING (vec_id)) b
             ON a.q_id = b.q_id AND a.vec_id <> b.vec_id
-        ), sel1 AS (
+        ), sel1 AS MATERIALIZED (
           SELECT q_id, vec_id, rel_micro, 1 AS sel_order,
                  CAST(0 AS BIGINT) AS max_prev_micro
           FROM (SELECT *, row_number() OVER (PARTITION BY q_id
@@ -1997,7 +1999,7 @@ def _mmr_sql() -> str:
           FROM cand c JOIN m{step} m ON m.q_id = c.q_id AND m.vec_id = c.vec_id
           WHERE NOT EXISTS (SELECT 1 FROM {prev} s
                             WHERE s.q_id = c.q_id AND s.vec_id = c.vec_id)
-        ), sel{step} AS (
+        ), sel{step} AS MATERIALIZED (
           SELECT * FROM {prev}
           UNION ALL
           SELECT q_id, vec_id, rel_micro, {step} AS sel_order, max_prev_micro

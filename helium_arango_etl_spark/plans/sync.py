@@ -43,7 +43,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.scalars import arango_id, content_key, synthetic_lat, synthetic_lon
-from ..io import compact_parquet, fresh_rows, merge_upsert, read_table
+from ..io import compact_parquet, fresh_rows, merge_upsert, read_parquet, read_table
 from ..operators.graph import witness_subgraph
 from ..operators.windows import daily_balances_nested
 
@@ -217,18 +217,16 @@ def _data_files(path: str) -> list[str]:
     return sorted(f for f in os.listdir(path) if f.endswith(".parquet") and not f.startswith("."))
 
 
-def _read_store(
-    spark: SparkSession, out_dir: str, name: str, schema: str | None = None
-) -> DataFrame | None:
-    """The committed collection, or None if it was never written.  A
-    collection that exists but cannot be read raises (when the plan runs)
-    rather than being taken for an empty one."""
+def _read_store(spark: SparkSession, out_dir: str, name: str) -> DataFrame | None:
+    """The committed collection, or None if it was never written.  Its
+    schema comes from its footer, so building the frame runs no Spark job.
+    A collection that exists but cannot be read raises rather than being
+    taken for an empty one."""
     path = _store_path(out_dir, name)
     _recover(path)
     if not os.path.isdir(path):
         return None
-    reader = spark.read if schema is None else spark.read.schema(schema)
-    return reader.parquet(path)
+    return read_parquet(spark, path)
 
 
 def _write_merged(
@@ -237,12 +235,11 @@ def _write_merged(
     """Merge ``new`` into the stored collection with upsert/ignore semantics.
 
     ``upsert`` commits ``merge_upsert(old, new)`` as a new version.
-    ``ignore`` writes only ``io.fresh_rows`` against the committed keys (read
-    with an explicit schema: no inference job) and moves each new part file
-    into the live directory; a merge with no fresh rows commits nothing,
-    and the merge that takes a collection past ``MAX_DATA_FILES`` data
-    files folds it into one version.  The first write of a collection is a
-    whole version either way."""
+    ``ignore`` writes only ``io.fresh_rows`` against the committed keys and
+    moves each new part file into the live directory; a merge with no
+    fresh rows commits nothing, and the merge that takes a collection past
+    ``MAX_DATA_FILES`` data files folds it into one version.  The first
+    write of a collection is a whole version either way."""
     os.makedirs(out_dir, exist_ok=True)
     _sweep_staging(out_dir, name)
     if mode == "upsert":
@@ -250,7 +247,7 @@ def _write_merged(
         merged = new if old is None else merge_upsert(old, new)
         _replace(out_dir, name, merged.write.parquet)
         return
-    keys = _read_store(spark, out_dir, name, schema="_key string")
+    keys = _read_store(spark, out_dir, name)
     if keys is None:
         _replace(out_dir, name, new.dropDuplicates(["_key"]).write.parquet)
         return
@@ -270,7 +267,7 @@ def _write_merged(
 def read_collection(spark: SparkSession, out_dir: str, name: str) -> DataFrame:
     path = _store_path(out_dir, name)
     _recover(path)
-    return spark.read.parquet(path)
+    return read_parquet(spark, path)
 
 
 # ---------- sync orchestration ----------

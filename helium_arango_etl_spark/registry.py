@@ -753,6 +753,8 @@ def _hits_sql() -> str:
         )"""
     ]
 
+    # {out}f{i} is read twice per step: materialized, or DuckDB inlines
+    # 2^HITS_ITERS copies of the chain
     def flow(i, src_cte, from_col, to_col, out):
         return f"""
         , {out}raw{i} AS (
@@ -760,7 +762,7 @@ def _hits_sql() -> str:
           FROM edges e JOIN {src_cte} p
             ON p.city_key = e.city_key AND p.node = e.{from_col}
           GROUP BY e.city_key, e.{to_col}
-        ), {out}f{i} AS (
+        ), {out}f{i} AS MATERIALIZED (
           SELECT nd.city_key, nd.node, coalesce(r.raw, 0) AS raw
           FROM nodes nd LEFT JOIN {out}raw{i} r
             ON r.city_key = nd.city_key AND r.node = nd.node

@@ -26,18 +26,18 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..io import apply_retention, normalize_event_ts
+from ..io import apply_retention, normalize_event_ts, parquet_schema
 from ..plans.sync import _replace, _write_merged, payment_edges, read_collection
 
 
 def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """File-source stream over the events table.  ``ts`` is normalized
-    schema-adaptively (epoch-nanos long or native timestamp — same
-    convention as io.read_table)."""
+    """File-source stream over the events table, with the schema a file
+    source requires taken from the table's footer (no Spark job).  ``ts``
+    is normalized schema-adaptively (epoch-nanos long or native timestamp
+    — same convention as io.read_table)."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(os.path.join(sf_dir, "events.parquet")).schema
     stream = (
-        spark.readStream.schema(schema)
+        spark.readStream.schema(parquet_schema(os.path.join(sf_dir, "events.parquet")))
         .option("pathGlobFilter", "events.parquet")
         .option("maxFilesPerTrigger", "1")
         .parquet(sf_dir)

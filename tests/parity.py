@@ -79,7 +79,9 @@ def _rowset(pdf: pd.DataFrame):
 
 
 def run_oracle(sql: str, sf_dir: str) -> pd.DataFrame:
-    con = duckdb.connect()
+    # a fixed cap, so an oracle that blows up fails here instead of
+    # borrowing most of the host's memory
+    con = duckdb.connect(config={"memory_limit": "2GB"})
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
     pdf = con.execute(sql).df()
