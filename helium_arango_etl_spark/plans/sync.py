@@ -26,8 +26,11 @@ directory aside to ``<collection>.prev`` before renaming the staged one in;
 readers restore ``.prev`` if a crash fell between the two renames.  Spark
 writes into ``<out_dir>/<collection>_<random>/data``; a stale staging
 directory is swept by the next merge.  One writer per collection at a time.
-At scale these would be Delta tables with MERGE and a transaction log (see
-the ``io`` module notes).
+``sync_inventories`` keeps that rule while it runs its five merges
+concurrently, one driver thread per collection on the caller's session: it
+waits for all of them and only then raises the first failure.  At scale
+these would be Delta tables with MERGE and a transaction log (see the
+``io`` module notes).
 """
 
 from __future__ import annotations
@@ -39,6 +42,7 @@ import shutil
 import tempfile
 from typing import Callable
 
+from pyspark import InheritableThread
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
@@ -273,15 +277,51 @@ def read_collection(spark: SparkSession, out_dir: str, name: str) -> DataFrame:
 # ---------- sync orchestration ----------
 
 
+# sync_inventories' merges in submission order: witnesses, the longest
+# chain, first, so FIFO scheduling gives its tasks priority
+_INVENTORIES = (
+    ("witnesses", build_witnesses, "ignore"),
+    ("balances", build_balances, "upsert"),
+    ("accounts", build_accounts, "upsert"),
+    ("hotspots", build_hotspots, "upsert"),
+    ("cities", build_cities, "upsert"),
+)
+
+
 def sync_inventories(spark: SparkSession, sf_dir: str, out_dir: str) -> None:
     """Entry point 1 (etl.py:77-109): snapshot refresh of all vertex
     collections + witness import.  Snapshots use upsert (full re-import is
-    idempotent); witnesses use ignore (first write wins)."""
-    _write_merged(spark, out_dir, "accounts", build_accounts(spark, sf_dir), "upsert")
-    _write_merged(spark, out_dir, "hotspots", build_hotspots(spark, sf_dir), "upsert")
-    _write_merged(spark, out_dir, "cities", build_cities(spark, sf_dir), "upsert")
-    _write_merged(spark, out_dir, "balances", build_balances(spark, sf_dir), "upsert")
-    _write_merged(spark, out_dir, "witnesses", build_witnesses(spark, sf_dir), "ignore")
+    idempotent); witnesses use ignore (first write wins).
+
+    The five merges share no output and no persisted frame other than the
+    witness edges, which only the witnesses merge reads, so they run
+    concurrently: one driver thread per collection on ``spark``, each
+    started as a ``pyspark.InheritableThread`` with its own copy of the
+    caller's job group, description and tags.  The call returns once every
+    merge has finished and then raises the first failure in
+    ``COLLECTIONS`` order, with any others added as notes; the merges that
+    succeeded stay committed.  Each collection still has one writer at a
+    time, so a retry after a failure is a plain re-run."""
+    failures: dict[str, BaseException] = {}
+
+    def merge(name: str, build: Callable[[SparkSession, str], DataFrame], mode: str) -> None:
+        try:
+            _write_merged(spark, out_dir, name, build(spark, sf_dir), mode)
+        except BaseException as e:  # raised below, in the caller's thread
+            failures[name] = e
+
+    threads = [
+        InheritableThread(merge, args=inventory, session=spark) for inventory in _INVENTORIES
+    ]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    raised = [failures[n] for n in COLLECTIONS if n in failures]
+    if raised:
+        for other in raised[1:]:
+            raised[0].add_note(f"another inventory merge failed too: {other!r}")
+        raise raised[0]
 
 
 def backfill_payments(

@@ -23,6 +23,7 @@ stale.
 from __future__ import annotations
 
 import os
+import threading
 import weakref
 from typing import Any, Callable
 
@@ -57,8 +58,11 @@ def get_spark(
 
 
 # One memo table for the whole engine: session -> {(key, sf_dir): (fp, value)}.
-# WeakKey so a closed session's entries die with it.
+# WeakKey so a closed session's entries die with it.  _LOCK serializes every
+# lookup, eviction and build; it is reentrant because a build may ask for
+# another entry (the city metrics read the witness edges).
 _CACHE: "weakref.WeakKeyDictionary[SparkSession, dict]" = weakref.WeakKeyDictionary()
+_LOCK = threading.RLock()
 
 
 def _fingerprint(sf_dir: str | None) -> tuple:
@@ -94,19 +98,27 @@ def cached(spark: SparkSession, key: Any, sf_dir: str | None, build: Callable[[]
     CacheManager would otherwise substitute a stale persisted frame into
     any new plan over the same paths.  ``build`` persists its own result if
     it is a DataFrame worth keeping resident.  ``sf_dir=None`` keys a value
-    that depends on no input files."""
-    per_session = _CACHE.setdefault(spark, {})
-    fp = _fingerprint(sf_dir)
-    for k in [k for k, (f, _) in per_session.items() if k[1] == sf_dir and f != fp]:
-        _release(per_session.pop(k)[1])
-    entry = per_session.get((key, sf_dir))
-    if entry is None:
-        entry = per_session[(key, sf_dir)] = (fp, build())
-    return entry[1]
+    that depends on no input files.
+
+    Safe for concurrent callers: the fingerprint, the eviction, the lookup
+    and the build run under one lock, so threads asking for one entry get
+    the one object a single ``build`` made, and an eviction only drops
+    entries whose files changed after they were handed out."""
+    with _LOCK:
+        per_session = _CACHE.setdefault(spark, {})
+        fp = _fingerprint(sf_dir)
+        for k in [k for k, (f, _) in per_session.items() if k[1] == sf_dir and f != fp]:
+            _release(per_session.pop(k)[1])
+        entry = per_session.get((key, sf_dir))
+        if entry is None:
+            entry = per_session[(key, sf_dir)] = (fp, build())
+        return entry[1]
 
 
 def clear_caches(spark: SparkSession) -> None:
     """Drop every memoized entry of this session and unpersist the
     persisted DataFrames among them."""
-    for _, value in _CACHE.pop(spark, {}).values():
+    with _LOCK:
+        entries = _CACHE.pop(spark, {})
+    for _, value in entries.values():
         _release(value)

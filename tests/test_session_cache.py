@@ -5,6 +5,10 @@ from __future__ import annotations
 
 import os
 import shutil
+import sys
+import threading
+import time
+from concurrent.futures import ThreadPoolExecutor
 
 import pyarrow.parquet as pq
 import pytest
@@ -115,3 +119,36 @@ def test_unchanged_input_is_built_once(spark, tmp_path):
     clear_caches(spark)
     assert cached(spark, "k", d, build) == 4
     clear_caches(spark)
+
+
+def test_concurrent_callers_share_one_build(spark, tmp_path):
+    """Eight threads (more than the test session's cores) ask for the same
+    entries at once: each entry is built once and every thread gets the
+    one object that build made."""
+    d = str(tmp_path / "sf")
+    os.makedirs(d)
+    open(os.path.join(d, "t.parquet"), "w").close()
+    calls = []
+
+    def build():
+        calls.append(1)
+        time.sleep(0.2)  # every thread asks while the first build runs
+        return object()
+
+    start = threading.Barrier(8, timeout=30)
+
+    def ask(i):
+        start.wait()
+        return [cached(spark, k, d, build) for k in ("a", "b", "a", "b")[i % 2 :]]
+
+    clear_caches(spark)
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with ThreadPoolExecutor(8) as pool:
+            got = list(pool.map(ask, range(8), timeout=60))
+    finally:
+        sys.setswitchinterval(interval)
+        clear_caches(spark)
+    assert len(calls) == 2
+    assert len({id(v) for vs in got for v in vs}) == 2

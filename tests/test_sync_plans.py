@@ -6,10 +6,13 @@ upsert/ignore sinks, etl.py:143-147)."""
 from __future__ import annotations
 
 import os
+import uuid
+import warnings
 
 import pytest
 from pyspark.sql import functions as F
 
+from helium_arango_etl_spark.plans import sync
 from helium_arango_etl_spark.plans.sync import (
     MAX_DATA_FILES,
     _write_merged,
@@ -19,6 +22,9 @@ from helium_arango_etl_spark.plans.sync import (
     read_collection,
     sync_inventories,
 )
+
+
+INVENTORIES = ("accounts", "hotspots", "cities", "balances", "witnesses")
 
 
 def _table_hash(df):
@@ -31,10 +37,72 @@ def _table_hash(df):
 def test_full_sync_and_rerun_identical(spark, sf_dir, tmp_path):
     out = str(tmp_path / "store")
     sync_inventories(spark, sf_dir, out)
-    first = {n: _table_hash(read_collection(spark, out, n)) for n in ("accounts", "hotspots", "cities", "balances", "witnesses")}
+    first = {n: _table_hash(read_collection(spark, out, n)) for n in INVENTORIES}
     sync_inventories(spark, sf_dir, out)  # re-run: upsert/ignore must be no-ops
     second = {n: _table_hash(read_collection(spark, out, n)) for n in first}
     assert first == second
+
+
+def _keys(spark, out):
+    return {n: {r["_key"] for r in read_collection(spark, out, n).select("_key").collect()} for n in INVENTORIES}
+
+
+def _failing_merge(monkeypatch, fail):
+    """Make ``sync_inventories``' merges of the ``fail`` collections raise
+    at once, while the others run for real."""
+    real = sync._write_merged
+
+    def merge(spark, out_dir, name, new, mode):
+        if name in fail:
+            raise RuntimeError(f"injected {name} failure")
+        real(spark, out_dir, name, new, mode)
+
+    monkeypatch.setattr(sync, "_write_merged", merge)
+
+
+def test_failed_merge_waits_for_the_others_and_reruns_clean(spark, sf_dir, tmp_path, monkeypatch):
+    out = str(tmp_path / "store")
+    _failing_merge(monkeypatch, {"balances"})
+    with pytest.raises(RuntimeError, match="injected balances"):
+        sync_inventories(spark, sf_dir, out)
+    monkeypatch.undo()
+    # the other merges finished and committed before the call raised, and
+    # left neither a staging directory nor an aside copy
+    assert sorted(os.listdir(out)) == sorted(n for n in INVENTORIES if n != "balances")
+    for n in INVENTORIES:
+        if n != "balances":
+            assert read_collection(spark, out, n).count() > 0, n
+
+    sync_inventories(spark, sf_dir, out)
+    fresh = str(tmp_path / "fresh")
+    sync_inventories(spark, sf_dir, fresh)
+    assert _keys(spark, out) == _keys(spark, fresh)
+    assert sorted(os.listdir(out)) == sorted(INVENTORIES)
+
+
+def test_first_failure_in_collection_order_is_raised(spark, sf_dir, tmp_path, monkeypatch):
+    # witnesses starts first, balances comes first in COLLECTIONS
+    _failing_merge(monkeypatch, {"witnesses", "balances"})
+    with pytest.raises(RuntimeError, match="injected balances") as raised:
+        sync_inventories(spark, sf_dir, str(tmp_path / "store"))
+    assert any("injected witnesses" in note for note in raised.value.__notes__)
+
+
+def test_sync_jobs_run_in_the_callers_job_group(spark, sf_dir, tmp_path):
+    sc = spark.sparkContext
+    ungrouped = set(sc.statusTracker().getJobIdsForGroup(None))
+    group = f"sync-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "sync under the caller's job group")
+    try:
+        with warnings.catch_warnings(record=True) as caught:
+            warnings.simplefilter("always")
+            sync_inventories(spark, sf_dir, str(tmp_path / "store"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert set(sc.statusTracker().getJobIdsForGroup(None)) <= ungrouped
+    assert list(sc.statusTracker().getJobIdsForGroup(group))
+    assert [str(w.message) for w in caught if issubclass(w.category, UserWarning)] == []
 
 
 def test_backfill_chunking_equivalence(spark, sf_dir, tmp_path):
