@@ -31,6 +31,12 @@ def arango_id(collection: str, key: Column | str) -> Column:
     return F.concat(F.lit(collection + "/"), key_col.cast("string"))
 
 
+def city_key() -> Column:
+    """md5 city key over the ``n_name``/``r_name`` columns.  ``concat_ws``
+    skips nulls: a row no location joined keys as ``md5('')``."""
+    return F.md5(F.concat_ws("|", "n_name", "r_name"))
+
+
 EARTH_RADIUS_M = 6371008.8
 
 

@@ -35,7 +35,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, StringType, StructField, StructType
 
 from ..functions.graphalgs import betweenness_centrality, hits, pagerank
-from ..functions.scalars import haversine_m, synthetic_lat, synthetic_lon
+from ..functions.scalars import city_key, haversine_m, synthetic_lat, synthetic_lon
 from ..io import read_table, spread
 from ..session import cached, clear_caches
 
@@ -87,7 +87,7 @@ def _build_witness_subgraph(spark: SparkSession, sf_dir: str) -> DataFrame:
         nation.join(F.broadcast(region), nation.n_regionkey == region.r_regionkey)
         .select(
             "n_nationkey",
-            F.md5(F.concat_ws("|", "n_name", "r_name")).alias("city_key"),
+            city_key().alias("city_key"),
         )
     )
 
@@ -305,19 +305,20 @@ def hotspot_writeback_surface(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def hotspot_metrics_writeback(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """J4 writeback shape: metrics merged back onto the hotspot snapshot
-    (importBulk onDuplicate='update', arango_queries.py:176-177).
-    Only challengee nodes ('S…') land on hotspots; witness-only nodes are
-    metric-carrying but have no hotspot doc, exactly like the reference
-    (importBulk creates them — here we inner-join, keeping snapshot keys)."""
-    from .relational import hotspot_snapshot
+    """J4 writeback (etl.py steps 5-6, arango_queries.py:176-177, 307-309):
+    the hotspot document with ``rewards_5d`` from the D1 aggregate and the
+    six J2-J5 metrics from :func:`combined_city_metrics`.  Only challengee
+    nodes ('S…') have hotspot docs.  It carries every stored column, so
+    ``io.merge_upsert`` onto the synced hotspots is a plain replace."""
+    from .relational import hotspot_document, supplier_rewards
 
-    snap = hotspot_snapshot(spark, sf_dir).drop(
-        "betweenness_centrality", "pagerank", "rewards_5d", "hub_score", "authority_score"
+    metrics = (
+        combined_city_metrics(spark, sf_dir)
+        .filter(F.col("address").startswith("S"))
+        .withColumn("address", F.expr("substring(address, 2)").cast("bigint"))
+        .drop("city_key")
     )
-    metrics = city_graph_metrics(spark, sf_dir).filter(F.col("address").startswith("S"))
-    keyed = metrics.withColumn("address", F.expr("substring(address, 2)").cast("bigint"))
-    return snap.join(keyed.drop("city_key"), on="address", how="left")
+    return hotspot_document(spark, sf_dir, supplier_rewards(spark, sf_dir), metrics)
 
 
 # Weakly-connected-components convergence bound (see operators.dedup

@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 
 from ..functions.scalars import (
     arango_id,
+    city_key,
     content_key,
     end_of_day_ts,
     haversine_m,
@@ -45,6 +46,18 @@ WINDOW_START = "1996-01-01"
 WINDOW_END = "1998-01-01"
 
 
+def supplier_rewards(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """D1 (get_recent_rewards, blockchain_queries.py:182-186): per-gateway
+    in-window reward sum (address, rewards_5d), the one lineitem aggregate
+    of the reward queries and the hotspot writeback."""
+    li = read_table(spark, sf_dir, "lineitem").select("l_suppkey", "l_extendedprice", "l_shipdate")
+    return (
+        li.filter((F.col("l_shipdate") > F.lit(WINDOW_START)) & (F.col("l_shipdate") < F.lit(WINDOW_END)))
+        .groupBy(F.col("l_suppkey").alias("address"))
+        .agg(F.sum(F.col("l_extendedprice").cast("decimal(18,2)")).cast("double").alias("rewards_5d"))
+    )
+
+
 def rewards_5d(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Flagship (SURVEY §7 Step 1): grouped rewards sum merged onto the
     hotspot snapshot.
@@ -58,14 +71,9 @@ def rewards_5d(spark: SparkSession, sf_dir: str) -> DataFrame:
     The dim side (supplier) is the small side at any scale — the aggregated
     fact is at most |supplier| rows too, so AQE broadcasts; no sort-merge.
     """
-    li = read_table(spark, sf_dir, "lineitem").select("l_suppkey", "l_extendedprice", "l_shipdate")
-    agg = (
-        li.filter((F.col("l_shipdate") > F.lit(WINDOW_START)) & (F.col("l_shipdate") < F.lit(WINDOW_END)))
-        .groupBy("l_suppkey")
-        .agg(F.sum(F.col("l_extendedprice").cast("decimal(18,2)")).cast("double").alias("rewards_5d"))
-    )
+    agg = supplier_rewards(spark, sf_dir)
     sup = read_table(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
-    return sup.join(agg, sup.s_suppkey == agg.l_suppkey, "left").select("s_suppkey", "s_name", "rewards_5d")
+    return sup.join(agg, sup.s_suppkey == agg.address, "left").select("s_suppkey", "s_name", "rewards_5d")
 
 
 TARGET_ADDRESS = 7  # the fixed lookup key for the per-address reward query
@@ -77,49 +85,70 @@ def rewards_by_address(spark: SparkSession, sf_dir: str) -> DataFrame:
     restricted to one gateway, i.e. B3 equality + B2 window + D4 scalar SUM.
     The equality predicate pushes into the parquet scan, so at scale this
     reads one gateway's row groups, not the fact table."""
-    li = read_table(spark, sf_dir, "lineitem").select("l_suppkey", "l_extendedprice", "l_shipdate")
     return (
-        li.filter(F.col("l_suppkey") == TARGET_ADDRESS)
-        .filter((F.col("l_shipdate") > F.lit(WINDOW_START)) & (F.col("l_shipdate") < F.lit(WINDOW_END)))
-        .agg(F.sum(F.col("l_extendedprice").cast("decimal(18,2)")).cast("double").alias("rewards"))
+        supplier_rewards(spark, sf_dir)
+        .filter(F.col("address") == TARGET_ADDRESS)
+        .agg(F.sum("rewards_5d").alias("rewards"))
         .select(F.lit(TARGET_ADDRESS).cast("bigint").alias("address"), "rewards")
     )
 
 
-def hotspot_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hotspot inventory snapshot: the reference's 3-way left join
-    (gateway_inventory ⟕ gateway_status ⟕ locations,
-    blockchain_queries.py:116, 137-139) plus null-initialized analytics
-    columns (blockchain_queries.py:130, 162-163).
+# the analytics columns of the hotspot document (arango_schema.py:52-60)
+HOTSPOT_ANALYTICS = (
+    "rewards_5d", "betweenness_centrality", "betweenness_centrality_n",
+    "pagerank", "pagerank_n", "hub_score", "authority_score",
+)
 
-    Testdata: supplier ⟕ status-subset ⟕ nation ⟕ region.  The status side
-    covers only odd suppkeys, exercising the null path of C2.  All dims are
-    broadcast (they are small at every scale — dims grow ~log of fact).
-    """
+
+def hotspot_document(spark: SparkSession, sf_dir: str, *analytics: DataFrame) -> DataFrame:
+    """The hotspot document (arango_schema.py:32-61), the one builder of
+    the hotspots collection, the metrics writeback and the flat snapshot:
+    the reference's gateway_inventory ⟕ gateway_status ⟕ locations
+    (blockchain_queries.py:116, 135-169) as supplier ⟕ nation ⟕ region,
+    dims broadcast.  Status covers only odd suppkeys (the C2 null path).
+    Each ``analytics`` frame, keyed by ``address``, is left-joined; the
+    analytics columns none carries stay null (H15)."""
     sup = read_table(spark, sf_dir, "supplier")
     nation = read_table(spark, sf_dir, "nation")
     region = read_table(spark, sf_dir, "region")
-    status = (
-        sup.filter(F.col("s_suppkey") % 2 == 1)
-        .select(F.col("s_suppkey").alias("st_suppkey"), F.lit("online").alias("online"))
-    )
-    return (
-        sup.join(F.broadcast(status), sup.s_suppkey == status.st_suppkey, "left")
-        .join(F.broadcast(nation), sup.s_nationkey == nation.n_nationkey, "left")
+    doc = (
+        sup.join(F.broadcast(nation), sup.s_nationkey == nation.n_nationkey, "left")
         .join(F.broadcast(region), nation.n_regionkey == region.r_regionkey, "left")
-        .select(
-            F.col("s_suppkey").alias("address"),
-            F.col("s_name").alias("name"),
-            F.col("online"),
+    )
+    for a in analytics:
+        doc = doc.join(a.withColumnRenamed("address", "s_suppkey"), "s_suppkey", "left")
+    return doc.select(
+        F.col("s_suppkey").cast("string").alias("_key"),
+        F.col("s_suppkey").alias("address"),
+        F.col("s_name").alias("name"),
+        F.col("s_acctbal").alias("balance"),
+        F.when(F.col("s_suppkey") % 2 == 1, F.lit("online")).alias("online"),
+        F.struct(
+            city_key().alias("city_key"),
             F.col("n_name").alias("long_city"),
             F.col("r_name").alias("long_country"),
-            F.md5(F.concat_ws("|", "n_name", "r_name")).alias("city_key"),
-            F.lit(None).cast("double").alias("rewards_5d"),
-            F.lit(None).cast("double").alias("betweenness_centrality"),
-            F.lit(None).cast("double").alias("pagerank"),
-            F.lit(None).cast("double").alias("hub_score"),
-            F.lit(None).cast("double").alias("authority_score"),
-        )
+        ).alias("location_details"),
+        F.struct(
+            F.lit("Point").alias("type"),
+            F.array(
+                synthetic_lon(F.col("s_suppkey")), synthetic_lat(F.col("s_suppkey"))
+            ).alias("coordinates"),
+        ).alias("geo_location"),
+        *(
+            F.col(c) if c in doc.columns else F.lit(None).cast("double").alias(c)
+            for c in HOTSPOT_ANALYTICS
+        ),
+    )
+
+
+def hotspot_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Hotspot inventory snapshot (C2 status left join, C3 broadcast dim
+    lookups, H15 null analytics): the flat projection of
+    :func:`hotspot_document` before any analytics arrive."""
+    return hotspot_document(spark, sf_dir).select(
+        "address", "name", "online", "location_details.long_city",
+        "location_details.long_country", "location_details.city_key",
+        "rewards_5d", "betweenness_centrality", "pagerank", "hub_score", "authority_score",
     )
 
 
@@ -137,7 +166,7 @@ def cities(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("n_name", "r_name")
         .distinct()
         .select(
-            F.md5(F.concat_ws("|", "n_name", "r_name")).alias("city_key"),
+            city_key().alias("city_key"),
             F.col("n_name").alias("long_city"),
             F.col("r_name").alias("long_country"),
         )

@@ -2,8 +2,9 @@
 
 Reference lifecycle (SURVEY.md §3):
 - ``sync_inventories`` (etl.py:77-109): snapshot collections (accounts,
-  hotspots, cities) fully re-imported each cycle; witnesses imported with
-  first-write-wins + retention; rewards merged onto hotspots.
+  hotspots, cities, balances) fully re-imported each cycle; witnesses
+  imported first-write-wins (retention is ``follower.evict_witnesses``).
+  Rewards and metrics reach hotspots via ``graph.hotspot_metrics_writeback``.
 - ``sync_dynamic_collections`` (etl.py:111-130): payments backfilled in
   fixed-size block chunks, each chunk importBulk'd with onDuplicate='ignore'
   — re-running any chunk is a no-op (content-hash keys).
@@ -46,9 +47,10 @@ from pyspark import InheritableThread
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.scalars import arango_id, content_key, synthetic_lat, synthetic_lon
+from ..functions.scalars import arango_id, content_key
 from ..io import compact_parquet, fresh_rows, merge_upsert, read_parquet, read_table
 from ..operators.graph import witness_subgraph
+from ..operators.relational import cities, hotspot_document
 from ..operators.windows import daily_balances_nested
 
 COLLECTIONS = ("accounts", "hotspots", "cities", "balances", "payments", "witnesses")
@@ -75,47 +77,8 @@ def build_accounts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def build_hotspots(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """hotspots vertex with the reference's nested shape: flat inventory cols
-    + ``location_details`` struct + ``geo_location`` GeoJSON Point struct +
-    null-initialized analytics columns (blockchain_queries.py:135-169,
-    arango_schema.py:32-61)."""
-    sup = read_table(spark, sf_dir, "supplier")
-    nation = read_table(spark, sf_dir, "nation")
-    region = read_table(spark, sf_dir, "region")
-    joined = (
-        sup.join(F.broadcast(nation), sup.s_nationkey == nation.n_nationkey, "left")
-        .join(F.broadcast(region), nation.n_regionkey == region.r_regionkey, "left")
-    )
-    city_key = F.md5(F.concat_ws("|", "n_name", "r_name"))
-    return joined.select(
-        F.col("s_suppkey").cast("string").alias("_key"),
-        F.col("s_suppkey").alias("address"),
-        F.col("s_name").alias("name"),
-        F.col("s_acctbal").alias("balance"),
-        F.struct(
-            city_key.alias("city_key"),
-            F.col("n_name").alias("long_city"),
-            F.col("r_name").alias("long_country"),
-        ).alias("location_details"),
-        F.struct(
-            F.lit("Point").alias("type"),
-            F.array(
-                synthetic_lon(F.col("s_suppkey")), synthetic_lat(F.col("s_suppkey"))
-            ).alias("coordinates"),
-        ).alias("geo_location"),
-        F.lit(None).cast("decimal(18,2)").alias("rewards_5d"),
-        F.lit(None).cast("double").alias("betweenness_centrality"),
-        F.lit(None).cast("double").alias("pagerank"),
-        F.lit(None).cast("double").alias("hub_score"),
-        F.lit(None).cast("double").alias("authority_score"),
-    )
-
-
 def build_cities(spark: SparkSession, sf_dir: str) -> DataFrame:
     """cities vertex (D3 distinct + md5 key, blockchain_queries.py:90-112)."""
-    from ..operators.relational import cities
-
     return cities(spark, sf_dir).withColumn("_key", F.col("city_key"))
 
 
@@ -283,7 +246,7 @@ _INVENTORIES = (
     ("witnesses", build_witnesses, "ignore"),
     ("balances", build_balances, "upsert"),
     ("accounts", build_accounts, "upsert"),
-    ("hotspots", build_hotspots, "upsert"),
+    ("hotspots", hotspot_document, "upsert"),
     ("cities", build_cities, "upsert"),
 )
 

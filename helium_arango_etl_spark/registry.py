@@ -60,7 +60,7 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "witness_subgraph": G.witness_subgraph,
     "city_graph_metrics": G.city_graph_metrics,  # rows-only: networkx-equivalent numerics
     "city_hits": G.city_hits,  # rows-only: J5 hub/authority scores
-    "hotspot_metrics_writeback": G.hotspot_metrics_writeback,  # rows-only: depends on metrics
+    "hotspot_metrics_writeback": G.hotspot_metrics_writeback,  # rows-only: hotspot document + rewards + metrics
     "city_graph_nodes": G.city_graph_nodes,  # oracled skeleton of the metrics rows
     "witness_components": G.witness_components,  # oracled per-city WCC (min-label propagation)
     "hotspot_writeback_surface": G.hotspot_writeback_surface,  # oracled writeback join surface

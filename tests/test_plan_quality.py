@@ -10,6 +10,7 @@ that silently regresses them fails CI rather than a cluster run.
 from __future__ import annotations
 
 import io
+import os
 import re
 from contextlib import redirect_stdout
 
@@ -544,8 +545,9 @@ def test_sync_cycle_builds_witness_edges_once(spark, sf_dir):
     """The witnesses write and the metrics writeback of one cycle both
     scan the session's persisted witness_subgraph: its InMemoryRelation
     (matched by its output attributes) is in each plan, and the one
-    lineitem scan in each is that relation's own build — the fact-fact
-    join never runs a second time."""
+    orders scan in each is that relation's own build — the fact-fact
+    join never runs a second time.  (The writeback scans lineitem once
+    more, for its rewards aggregate.)"""
     from helium_arango_etl_spark.operators.graph import (
         hotspot_metrics_writeback,
         witness_subgraph,
@@ -559,7 +561,24 @@ def test_sync_cycle_builds_witness_edges_once(spark, sf_dir):
     for build in (build_witnesses, hotspot_metrics_writeback):
         plan = plan_of(build(spark, sf_dir))
         assert edges in plan, plan
-        assert plan.count("lineitem.parquet") == 1, plan
+        assert plan.count("orders.parquet") == 1, plan
+
+
+def test_writeback_upsert_is_a_plain_replace(spark, sf_dir, tmp_path):
+    """The writeback carries every stored hotspot column, so upserting it
+    onto the synced hotspots adds only merge_upsert's left-anti join: no
+    carry-over join reads the stored collection a second time."""
+    from helium_arango_etl_spark.io import merge_upsert
+    from helium_arango_etl_spark.operators.graph import hotspot_metrics_writeback
+    from helium_arango_etl_spark.plans.sync import read_collection, sync_inventories
+
+    out = str(tmp_path / "store")
+    sync_inventories(spark, sf_dir, out)
+    wb = hotspot_metrics_writeback(spark, sf_dir)
+    new = wb.withColumn("_key", wb["address"].cast("string"))
+    plan = plan_of(merge_upsert(read_collection(spark, out, "hotspots"), new))
+    assert re.findall(r"Join type: LeftAnti", plan) == ["Join type: LeftAnti"], plan
+    assert plan.count(os.path.join(out, "hotspots") + "]") == 1, plan
 
 
 def test_hybrid_rrf_operates_on_bounded_inputs(spark, sf_dir):

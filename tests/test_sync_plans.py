@@ -12,12 +12,12 @@ import warnings
 import pytest
 from pyspark.sql import functions as F
 
+from helium_arango_etl_spark.operators.relational import hotspot_document
 from helium_arango_etl_spark.plans import sync
 from helium_arango_etl_spark.plans.sync import (
     MAX_DATA_FILES,
     _write_merged,
     backfill_payments,
-    build_hotspots,
     build_payments,
     read_collection,
     sync_inventories,
@@ -127,7 +127,7 @@ def test_backfill_covers_unbounded_build(spark, sf_dir, tmp_path):
 
 
 def test_hotspots_nested_shape(spark, sf_dir):
-    hs = build_hotspots(spark, sf_dir)
+    hs = hotspot_document(spark, sf_dir)
     schema = {f.name: f.dataType.simpleString() for f in hs.schema.fields}
     assert schema["location_details"].startswith("struct<city_key:string")
     assert schema["geo_location"] == "struct<type:string,coordinates:array<double>>"
@@ -136,6 +136,9 @@ def test_hotspots_nested_shape(spark, sf_dir):
     assert len(row["geo_location"]["coordinates"]) == 2
     # analytics columns null-initialized (reference H15)
     assert row["pagerank"] is None and row["hub_score"] is None
+    # gateway status (C2): odd addresses online, the rest null
+    status = {r["address"]: r["online"] for r in hs.select("address", "online").collect()}
+    assert status and all(v == ("online" if a % 2 == 1 else None) for a, v in status.items())
 
 
 def test_witnesses_keep_latest_unique_pairs(spark, sf_dir):
@@ -179,10 +182,16 @@ def test_partial_upsert_merges_attributes(spark, tmp_path):
 
 
 def test_metrics_upsert_keeps_hotspot_attributes(spark, sf_dir, tmp_path):
-    """The metrics writeback upserted onto synced hotspots lacks the
-    nested location/geo columns and the balance; they must survive."""
-    from helium_arango_etl_spark.io import merge_upsert
+    """The metrics writeback upserted onto synced hotspots, the way a
+    cycle stores it, keeps one document shape: the stored columns are
+    exactly the hotspot document's, the location/geo columns and the
+    balance survive, and the writeback fills in the rewards and every
+    graph metric (reference etl.py steps 5-6)."""
+    from helium_arango_etl_spark.io import merge_upsert, read_parquet, write_keyed
     from helium_arango_etl_spark.operators.graph import hotspot_metrics_writeback
+    from helium_arango_etl_spark.registry import ORACLE
+
+    from .parity import run_oracle
 
     out = str(tmp_path / "store")
     sync_inventories(spark, sf_dir, out)
@@ -191,10 +200,25 @@ def test_metrics_upsert_keeps_hotspot_attributes(spark, sf_dir, tmp_path):
         read_collection(spark, out, "hotspots"),
         wb.withColumn("_key", wb["address"].cast("string")),
     )
-    assert merged.count() == build_hotspots(spark, sf_dir).count()
+    write_keyed(merged, str(tmp_path / "hotspots.next"))
+    stored = read_parquet(spark, str(tmp_path / "hotspots.next"))
+    doc = hotspot_document(spark, sf_dir)
+    assert stored.columns == doc.columns
+    assert not {"long_city", "long_country", "city_key"} & set(stored.columns)
+    assert stored.count() == doc.count()
     for c in ("location_details", "geo_location", "balance"):
-        assert merged.filter(F.col(c).isNull()).count() == 0, c
-    assert merged.filter(F.col("pagerank").isNotNull()).count() > 0
+        assert stored.filter(F.col(c).isNull()).count() == 0, c
+    rows = stored.select("address", "rewards_5d", "pagerank", "hub_score", "authority_score").collect()
+    oracle = run_oracle(ORACLE["rewards_5d"], sf_dir)
+    expected = {
+        int(a): None if r != r else float(r)
+        for a, r in zip(oracle["s_suppkey"], oracle["rewards_5d"])
+    }
+    assert {r["address"]: r["rewards_5d"] for r in rows} == expected
+    assert any(v is not None for v in expected.values())
+    assert any(r["pagerank"] is not None for r in rows)
+    for c in ("hub_score", "authority_score"):
+        assert all((r[c] is None) == (r["pagerank"] is None) for r in rows), c
 
 
 def test_partitioned_retention_drop(spark, sf_dir, tmp_path):
