@@ -1,6 +1,6 @@
 """Native graph algorithms for per-group (per-city) metrics.
 
-The reference runs networkx inside each worker process
+The reference runs networkx inside its own Python process
 (arango_queries.py:161-167):
 
     g = nx.DiGraph(); g.add_weighted_edges_from(edges)   # weight = distance_m
@@ -16,52 +16,61 @@ the exact algorithms + defaults the reference invokes, over plain numpy:
 - :func:`betweenness_centrality` — Brandes' algorithm, unweighted BFS,
   normalized by 1/((n-1)(n-2)) for directed graphs (networkx default
   ``normalized=True``; no endpoint counting).
+- :func:`hits` — networkx HITS on the graph without its weights.
 
-Both operate on an edge list and are deterministic: nodes are processed in
-sorted order, duplicate (src,dst) edges collapse last-wins exactly like
+Each algorithm takes an :class:`ArcGraph`, built once per graph and shared
+by all three, and returns one score per ``graph.nodes`` entry.  The build
+is deterministic: nodes in sorted order, arcs in (src, dst) order,
+duplicate (src, dst) arcs collapsed last-wins exactly like
 ``DiGraph.add_weighted_edges_from``.
 
-City subgraphs are small (hundreds of nodes), so O(V·E) Brandes inside an
-Arrow-batched ``applyInPandas`` group is the right scale split: Spark
-shuffles/groups the 100 TB edge set; Python only ever sees one city.
+City subgraphs are small (hundreds to thousands of nodes), so the engine
+runs these on the driver, one city at a time (operators/graph.py).
 """
 
 from __future__ import annotations
 
+from typing import NamedTuple
+
 import numpy as np
+import pandas as pd
 
 
-def _build(edges: list[tuple[str, str, float]]):
-    """Collapse duplicate arcs last-wins and index nodes in first-seen order
-    (networkx node order is insertion order; metrics are order-independent,
-    we sort only for float determinism)."""
-    arc_weight: dict[tuple[str, str], float] = {}
-    nodes: dict[str, int] = {}
-    for u, v, w in edges:
-        if u not in nodes:
-            nodes[u] = len(nodes)
-        if v not in nodes:
-            nodes[v] = len(nodes)
-        arc_weight[(u, v)] = float(w)
-    order = sorted(nodes)
-    idx = {n: i for i, n in enumerate(order)}
-    n = len(order)
-    return order, idx, n, arc_weight
+class ArcGraph(NamedTuple):
+    """A directed graph as a sorted node index plus parallel arc arrays."""
+
+    nodes: np.ndarray  # node names, sorted
+    src: np.ndarray  # int64 index into ``nodes``, per arc
+    dst: np.ndarray
+    weight: np.ndarray  # float64, per arc
+
+    @classmethod
+    def from_arcs(cls, src, dst, weight) -> "ArcGraph":
+        """Index the nodes of the parallel ``src``/``dst``/``weight``
+        sequences, vectorised: one sorted factorization of the endpoints,
+        then one unique over the arc codes, which keeps each (src, dst)'s
+        last weight."""
+        m = len(src)
+        codes, nodes = pd.factorize(np.concatenate([src, dst]), sort=True)
+        s, d = codes[:m].astype(np.int64), codes[m:].astype(np.int64)
+        # the first hit of each code in the reversed arcs is its last
+        # occurrence; unique returns the codes in (src, dst) order
+        _, first_rev = np.unique((s * len(nodes) + d)[::-1], return_index=True)
+        keep = m - 1 - first_rev
+        return cls(nodes, s[keep], d[keep], np.asarray(weight, dtype=np.float64)[keep])
 
 
 def pagerank(
-    edges: list[tuple[str, str, float]],
+    graph: ArcGraph,
     alpha: float = 0.85,
     max_iter: int = 100,
     tol: float = 1.0e-6,
-) -> dict[str, float]:
+) -> np.ndarray:
     """Weighted PageRank with networkx-default semantics."""
-    order, idx, n, arc_weight = _build(edges)
+    n = len(graph.nodes)
     if n == 0:
-        return {}
-    src = np.fromiter((idx[u] for (u, v) in arc_weight), dtype=np.int64, count=len(arc_weight))
-    dst = np.fromiter((idx[v] for (u, v) in arc_weight), dtype=np.int64, count=len(arc_weight))
-    w = np.fromiter(arc_weight.values(), dtype=np.float64, count=len(arc_weight))
+        return np.zeros(0)
+    src, dst, w = graph.src, graph.dst, graph.weight
     # bincount is the fast scatter-add: np.add.at is unbuffered and ~10x
     # slower on the per-iteration hot path of these power iterations
     out_weight = np.bincount(src, weights=w, minlength=n)
@@ -79,14 +88,14 @@ def pagerank(
         x = contrib + (danglesum + (1.0 - alpha)) * teleport
         if np.abs(x - xlast).sum() < n * tol:
             break
-    return {node: float(x[idx[node]]) for node in order}
+    return x
 
 
 def betweenness_centrality(
-    edges: list[tuple[str, str, float]],
+    graph: ArcGraph,
     max_exact_nodes: int = 1500,
     sample_sources: int = 256,
-) -> dict[str, float]:
+) -> np.ndarray:
     """Unweighted, normalized betweenness centrality (Brandes 2001) on the
     directed graph — exactly ``nx.betweenness_centrality(g)`` defaults for
     graphs up to ``max_exact_nodes``.
@@ -99,11 +108,8 @@ def betweenness_centrality(
     while keeping the estimate unbiased.  Deterministic sample -> stable
     hashes across runs.
     """
-    order, idx, n, arc_weight = _build(edges)
-    if n == 0:
-        return {}
-    src_arr = np.fromiter((idx[u] for (u, v) in arc_weight), dtype=np.int64, count=len(arc_weight))
-    dst_arr = np.fromiter((idx[v] for (u, v) in arc_weight), dtype=np.int64, count=len(arc_weight))
+    n = len(graph.nodes)
+    src_arr, dst_arr = graph.src, graph.dst
 
     if n > max_exact_nodes:
         stride = max(1, n // sample_sources)
@@ -148,24 +154,29 @@ def betweenness_centrality(
         bc *= 1.0 / ((n - 1) * (n - 2))
     else:
         bc[:] = 0.0
-    return {node: float(bc[idx[node]]) for node in order}
+    return bc
 
 
 def hits(
-    edges: list[tuple[str, str, float]],
+    graph: ArcGraph,
     max_iter: int = 100,
     tol: float = 1.0e-8,
-) -> tuple[dict[str, float], dict[str, float]]:
-    """HITS hub/authority scores (J5 — the reference reserves the columns but
-    leaves ``nx.algorithms.hits(g)`` commented out, arango_queries.py:168;
-    implemented here so the capability exists).  Power iteration with
-    networkx semantics: unweighted adjacency, per-iteration max-normalization,
-    final sum-normalization, convergence on L1 hub error."""
-    order, idx, n, arc_weight = _build(edges)
+) -> tuple[np.ndarray, np.ndarray]:
+    """HITS (hub, authority) scores (J5 — the reference reserves the
+    columns but leaves ``nx.algorithms.hits(g)`` commented out,
+    arango_queries.py:168; implemented here so the capability exists).
+
+    Equal to networkx HITS on the graph WITHOUT its weights: adjacency
+    entries are 1, per-iteration max-normalization, final
+    sum-normalization, convergence on L1 hub error.  The reference's
+    commented-out call would run on its ``g`` weighted by ``distance_m``,
+    which gives different scores (up to 0.118 apart in hub score on the
+    benchmark's seed-1 data); the unweighted form is kept, and the
+    declarative twin ``city_hits_joins`` is unweighted too."""
+    n = len(graph.nodes)
     if n == 0:
-        return {}, {}
-    src = np.fromiter((idx[u] for (u, v) in arc_weight), dtype=np.int64, count=len(arc_weight))
-    dst = np.fromiter((idx[v] for (u, v) in arc_weight), dtype=np.int64, count=len(arc_weight))
+        return np.zeros(0), np.zeros(0)
+    src, dst = graph.src, graph.dst
     h = np.full(n, 1.0 / n)
     for _ in range(max_iter):
         hlast = h
@@ -184,7 +195,4 @@ def hits(
         h /= hsum
     if asum > 0:
         a /= asum
-    return (
-        {node: float(h[idx[node]]) for node in order},
-        {node: float(a[idx[node]]) for node in order},
-    )
+    return h, a

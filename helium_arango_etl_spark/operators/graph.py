@@ -3,13 +3,15 @@
 J1  per-city witness subgraph: ONE declarative DAG (join + filter + distance
     column) grouped by city_key — not the reference's per-city AQL loop
     (arango_queries.py:145-156).  Fully oracle-checkable.
-J2/J3  betweenness centrality + weighted PageRank per city graph via
-    Arrow-batched ``applyInPandas`` running native numpy implementations of
-    the exact networkx algorithms the reference calls
-    (arango_queries.py:161-167).  Rows-only check + invariant unit tests.
+J2/J3  betweenness centrality + weighted PageRank per city graph, computed
+    on the driver (one Arrow collect of the edges, then native numpy
+    implementations of the exact networkx algorithms the reference calls,
+    arango_queries.py:161-167, city by city) — like the reference, which
+    runs networkx in its own process.  Rows-only check + invariant unit
+    tests + a networkx comparison on every test city.
 J4  normalization ÷ city mean with nan→0 (arango_queries.py:169-175) —
-    done inside the same pandas group (metrics and means share the group).
-J6  MIN_CITY_SIZE threshold on raw edge count (arango_queries.py:159).
+    done per city beside the metrics.
+J6  MIN_CITY_SIZE threshold on deduped edge count (arango_queries.py:159).
 
 Testdata mapping: hotspots→supplier, witnesses→customer (distinct node
 namespaces 'S<k>' / 'C<k>'), valid witness edges→lineitem⋈orders with
@@ -18,23 +20,25 @@ l_returnflag = 'N', city→supplier's nation, coords→deterministic synthetics.
 witnesses collection, the metrics and every graph query read its persisted
 edge set, and ``witness_arcs`` is its distinct (city, src, dst) projection.
 
-Scale: the edge build is a fact-fact shuffle join on orderkey then a shuffle
-on city_key for the grouped metrics — two shuffles total, both on keys with
-bounded skew (cities are bounded by geography; a mega-city is handled by
-AQE skew split for the join, and the per-group pandas work is O(city), not
-O(world)).
+Scale: the edge build is one fact-fact shuffle join on orderkey (a hot
+orderkey is split by AQE's skew join).  The metrics need no shuffle, but
+the driver holds the whole witness edge set and the metric rows: 20k edges
+at benchmark scale, 200k (152k metric rows) at sf0.1.  A source whose
+witness edges outgrow one driver needs a per-city distributed pass again.
 """
 
 from __future__ import annotations
 
 import os
 
+import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, StringType, StructField, StructType
 
-from ..functions.graphalgs import betweenness_centrality, hits, pagerank
+from ..functions.graphalgs import ArcGraph, betweenness_centrality, hits, pagerank
 from ..functions.scalars import city_key, haversine_m, synthetic_lat, synthetic_lon
 from ..io import read_table, spread
 from ..session import cached, clear_caches
@@ -135,103 +139,81 @@ _ALL_METRICS_SCHEMA = StructType(
 )
 
 
-def _dedup_edges(pdf: pd.DataFrame) -> pd.DataFrame | None:
-    """Keep-latest dedup per (src,dst) INSIDE the pandas group (E1): sorting
-    ascending by (src, dst, edge_ts, distance_m) and letting the last row
-    win per arc is exactly the window row_number()==1 on desc ordering — but
-    done group-locally it saves the whole extra shuffle+sort stage a window
-    over (city,src,dst) would cost before the city_key shuffle.  Returns
-    None when the deduped edge count is under MIN_CITY_SIZE (J6 — the
-    reference thresholds on the witness collection's deduped edges)."""
-    deduped = pdf.sort_values(["src", "dst", "edge_ts", "distance_m"]).drop_duplicates(
-        ["src", "dst"], keep="last"
-    )
-    if len(deduped) < MIN_CITY_SIZE:
-        return None
-    return deduped
-
-
-def _city_all_metrics(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Per-city group: DiGraph metrics exactly as arango_queries.py:159-175,
-    plus HITS (J5) — ALL metric families in one pandas pass, so the
-    subgraph shuffle, keep-latest dedup, and edge-list build run once per
-    city instead of once per metric family (VERDICT r1: the split form ran
-    the identical subgraph+dedup work twice).
-
-    Sort for float determinism; weights = distance_m.
-    """
-    deduped = _dedup_edges(pdf)
-    if deduped is None:
-        return pd.DataFrame(columns=[f.name for f in _ALL_METRICS_SCHEMA.fields])
-    city = pdf["city_key"].iloc[0]
-    edges = list(
-        deduped[["src", "dst", "distance_m"]].itertuples(index=False, name=None)
-    )
-    bc = betweenness_centrality(edges)
-    pg = pagerank(edges)
-    hubs, auths = hits(edges)
-    bc_mean = sum(bc.values()) / len(bc) if bc else 0.0
-    pg_mean = sum(pg.values()) / len(pg) if pg else 0.0
-
-    def nan0(x: float) -> float:
-        return 0.0 if x != x else x
-
-    rows = [
-        (
-            city,
-            node,
-            nan0(bc[node]),
-            nan0(bc[node] / bc_mean) if bc_mean else 0.0,
-            nan0(pg[node]),
-            nan0(pg[node] / pg_mean) if pg_mean else 0.0,
-            hubs[node],
-            auths[node],
-        )
-        for node in sorted(pg)
+_ARROW_METRICS_SCHEMA = pa.schema(
+    [
+        (f.name, pa.string() if isinstance(f.dataType, StringType) else pa.float64())
+        for f in _ALL_METRICS_SCHEMA.fields
     ]
-    return pd.DataFrame(rows, columns=[f.name for f in _ALL_METRICS_SCHEMA.fields])
+)
+
+
+def _normalised(x: np.ndarray) -> np.ndarray:
+    """J4: ``x`` divided by its mean, 0 where the mean is 0 or a value NaN."""
+    mean = x.mean()
+    return np.nan_to_num(x / mean, nan=0.0) if mean else np.zeros_like(x)
+
+
+def _city_all_metrics(city: str, edges: pd.DataFrame) -> pa.Table | None:
+    """One city's DiGraph metrics exactly as arango_queries.py:159-175,
+    plus HITS (J5), from one graph build shared by all three algorithms.
+    ``edges`` come oldest first (by edge_ts, then distance_m), so the
+    build's last-wins collapse of repeated arcs is the keep-latest dedup
+    (E1, the window row_number()==1 on desc ordering).  None when the
+    deduped edges are under MIN_CITY_SIZE (J6 — the reference thresholds
+    on the witness collection's deduped edges).  Weights = distance_m."""
+    g = ArcGraph.from_arcs(
+        edges["src"].to_numpy(), edges["dst"].to_numpy(), edges["distance_m"].to_numpy()
+    )
+    if len(g.src) < MIN_CITY_SIZE:
+        return None
+    bc = np.nan_to_num(betweenness_centrality(g), nan=0.0)
+    pg = np.nan_to_num(pagerank(g), nan=0.0)
+    hubs, auths = hits(g)
+    city_col = np.full(len(g.nodes), city, dtype=object)
+    return pa.Table.from_arrays(
+        [city_col, g.nodes, bc, _normalised(bc), pg, _normalised(pg), hubs, auths],
+        schema=_ARROW_METRICS_SCHEMA,
+    )
 
 
 # One combined-metrics result per (session, sf_dir), persisted: the two
 # registry queries (city_graph_metrics, city_hits) and the writeback are
-# projections of the SAME table, and a real pipeline materializes the
-# metrics table once per sync cycle rather than recomputing the subgraph per
-# metric family.
+# projections of the SAME table, computed once per sync cycle rather than
+# once per metric family.
 def combined_city_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """All per-city graph metrics (J2/J3/J5 + J4 normalization) in ONE
-    applyInPandas pass over the witness subgraph, persisted per session."""
+    """All per-city graph metrics (J2/J3/J5 + J4 normalization), computed
+    on the driver from the witness subgraph and persisted per session."""
     return cached(spark, "metrics", sf_dir, lambda: _build_city_metrics(spark, sf_dir))
 
 
 def _build_city_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    edges = witness_subgraph(spark, sf_dir).select(
-        "city_key", "src", "dst", "distance_m", "edge_ts"
+    # One Arrow collect of the persisted edges, then the per-city numpy
+    # work on the driver, like the reference's own networkx process.  A
+    # Python-worker stage would cost ~2.2 s to start its workers in a
+    # fresh JVM and ~0.2 s per task on top, several times the metric work
+    # itself (see the module docstring for the driver-memory bound).
+    edges = (
+        witness_subgraph(spark, sf_dir)
+        .select("city_key", "src", "dst", "distance_m", "edge_ts")
+        .toArrow()
+        .to_pandas(date_as_object=False)
+        .sort_values(["edge_ts", "distance_m"])
     )
-    # Pin the group-shuffle partition count for the Python stage: AQE's
-    # coalescing is byte-advisory and collapses this small-but-CPU-heavy
-    # shuffle to a handful of partitions, serializing the per-city
-    # Brandes/PageRank/HITS work that dominates the stage (measured at
-    # sf0.1: 25 cities -> 4 AQE partitions, 1.07 s; pinned fan-out,
-    # 0.72 s).  4x parallelism so the ~#cities groups spread without
-    # birthday collisions; an explicit count on repartition(col) is a
-    # hard requirement AQE will not re-coalesce, and hash(city_key)
-    # already satisfies applyInPandas' clustering, so no second
-    # exchange appears: FlatMapGroupsInPandas sits directly above the
-    # one city_key exchange.  Scale-adaptive: derives from the
-    # cluster's core count, not a local constant.
-    fanout = 4 * spark.sparkContext.defaultParallelism
-    return edges.repartition(fanout, "city_key").groupBy("city_key").applyInPandas(
-        _city_all_metrics, schema=_ALL_METRICS_SCHEMA
-    ).persist()
+    cities = [
+        _city_all_metrics(city, arcs) for city, arcs in edges.groupby("city_key", sort=False)
+    ]
+    cities = [t for t in cities if t is not None]
+    table = pa.concat_tables(cities) if cities else _ARROW_METRICS_SCHEMA.empty_table()
+    return spark.createDataFrame(table, _ALL_METRICS_SCHEMA).persist()
 
 
 def city_graph_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J2/J3/J4: per-city betweenness + PageRank, normalized by city mean.
 
-    Plan: witness subgraph -> ONE shuffle on city_key -> Arrow-batched
-    pandas per group, where keep-latest dedup per (src,dst) (E1, the
-    semantic the reference gets from onDuplicate='ignore' insert order)
-    happens group-locally before the graph build.  Replaces the reference's
+    Plan: one Arrow collect of the witness subgraph, then per city on the
+    driver the keep-latest dedup per (src,dst) (E1, the semantic the
+    reference gets from onDuplicate='ignore' insert order), the graph
+    build and the metrics; no shuffle.  Replaces the reference's
     fork-per-city-chunk orchestration (arango_queries.py:184-208) — and
     fixes its chunk-indexing bug by construction (K2).  Projection of the
     shared combined-metrics table (see combined_city_metrics).
@@ -258,12 +240,12 @@ def city_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def city_graph_nodes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Oracled row-skeleton of ``city_graph_metrics`` (J2/J3 coverage
-    bridge).  The metrics numerics need applyInPandas, but their ROW SURFACE
+    bridge).  The metrics numerics have no SQL form, but their ROW SURFACE
     is pure SQL: keep-latest dedup (E1) collapses each (src, dst) arc to one
     edge, so the deduped edge count is COUNT(DISTINCT arc) and the node set
     is the union of arc endpoints of every city clearing MIN_CITY_SIZE (J6).
     tests/test_graph_pipeline.py pins metrics rows == this skeleton, so the
-    driver's hash check on this query transitively verifies the pandas
+    driver's hash check on this query transitively verifies the numpy
     path's grouping/threshold/dedup behavior.
 
     Plan: the distinct-arc aggregation shuffles on (city, src, dst); the
@@ -386,7 +368,7 @@ PR_DAMPING = 0.85
 
 def city_pagerank_joins(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-city PageRank as PURE DataFrame joins — the declarative,
-    fully-oracled counterpart of the applyInPandas/networkx-exact path
+    fully-oracled counterpart of the networkx-exact numpy path
     (city_graph_metrics): PR_ITERS damped power-iteration steps with
     uniform edge weights and dangling-mass redistribution, over the valid
     witness edge set.
@@ -452,7 +434,7 @@ HITS_ITERS = 3
 
 def city_hits_joins(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-city HITS as pure DataFrame joins — declarative, fully-oracled
-    counterpart of the applyInPandas path (city_hits): HITS_ITERS
+    counterpart of the numpy path (city_hits): HITS_ITERS
     mutual-reinforcement steps with L1 normalization per step, over the
     valid witness edge set.  authority = normalized in-flow of hub scores,
     hub = normalized out-flow of authority scores.
@@ -1220,7 +1202,7 @@ BC_LEVELS = 4
 # in city size instead of the quadratic n²/const a fixed sampling
 # fraction gives (a 10× bigger city did 100× the work; now 10×).
 # K=16 (was 64, VERDICT r3 #5): this query is the CORRECTNESS-HARNESS
-# mirror of the applyInPandas production path (city_graph_metrics), not
+# mirror of the numpy production path (city_graph_metrics), not
 # a production query — the budget is sized so the sf0.1 probe stays
 # well under 30 s while the oracle compare remains bit-exact (the
 # DuckDB twin rebuilds from this same constant).
@@ -1232,7 +1214,7 @@ BC_SCALE = 1_000_000_000
 
 def city_betweenness_joins(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-city betweenness centrality as PURE DataFrame joins — the
-    declarative, fully-oracled counterpart of the applyInPandas/Brandes
+    declarative, fully-oracled counterpart of the numpy Brandes
     path (city_graph_metrics), completing the oracled-twin trio beside
     city_pagerank_joins and city_hits_joins.
 
@@ -1253,7 +1235,7 @@ def city_betweenness_joins(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side-combinable sum per level, the visited check an anti-join;
     the backward pass is the same joins reversed.  Work is
     O(sources x edges) per level — the sampling knob, not a plan change,
-    is what keeps a mega-city affordable, exactly like the applyInPandas
+    is what keeps a mega-city affordable, exactly like the numpy
     path's Brandes-Pich switch (functions/graphalgs.py).  Each level
     localCheckpoints to truncate lineage.
     """

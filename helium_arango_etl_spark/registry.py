@@ -1,7 +1,7 @@
 """Driver-contract registry: name -> Spark callable + equivalent DuckDB SQL.
 
 Every SQL-expressible operator from SURVEY.md §2 has BOTH entries; the
-non-SQL-expressible ones (graph metrics via applyInPandas, streaming) appear
+non-SQL-expressible ones (driver-side numpy graph metrics, streaming) appear
 only in QUERIES and get the driver's rows-only check.
 
 Column names are aligned 1:1 between the Spark plan and the oracle SQL —
@@ -58,7 +58,7 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "normalize_by_group_mean": W.normalize_by_group_mean,
     # --- graph / analytics (SURVEY §2 J) ---
     "witness_subgraph": G.witness_subgraph,
-    "city_graph_metrics": G.city_graph_metrics,  # rows-only: networkx-equivalent numerics
+    "city_graph_metrics": G.city_graph_metrics,  # rows-only: networkx-equivalent numerics, computed on the driver
     "city_hits": G.city_hits,  # rows-only: J5 hub/authority scores
     "hotspot_metrics_writeback": G.hotspot_metrics_writeback,  # rows-only: hotspot document + rewards + metrics
     "city_graph_nodes": G.city_graph_nodes,  # oracled skeleton of the metrics rows

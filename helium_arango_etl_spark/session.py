@@ -6,8 +6,9 @@ Defaults chosen for correctness-at-scale first, local testing second:
   splitting) — replaces the reference's hand-rolled process-level
   parallelism (arango_queries.py:322-349 time-slicing, :184-208 city
   chunking) with Spark's own planner.
-- Arrow on — every Python crossing (applyInPandas graph metrics) is
-  vectorized, never row-at-a-time.
+- Arrow on — every Python crossing (``mapInPandas`` decode, pandas
+  UDFs, ``toPandas``) is vectorized, never row-at-a-time.  The graph
+  metrics cross once: one Arrow collect to the driver.
 - Session timezone pinned to UTC — the reference stores unix seconds and
   timezone-aware timestamps (blockchain_tables.py:123, 196); pinning avoids
   local-tz drift between engines and between executors.

@@ -17,7 +17,7 @@ from __future__ import annotations
 
 import pytest
 
-from helium_arango_etl_spark.registry import ORACLE
+from helium_arango_etl_spark.registry import ORACLE, QUERIES
 
 from .test_degenerate_parity import _compare
 
@@ -82,3 +82,57 @@ def degen_empty(spark, tmp_path_factory):
 def test_empty_tables_parity(spark, degen_empty, name):
     tmp, con = degen_empty
     _compare(spark, tmp, con, name)
+
+
+def _assert_no_city_metrics(spark, sf_dir):
+    """No city clears MIN_CITY_SIZE: the metrics queries return no rows
+    in their declared types, and the writeback returns every hotspot
+    document with null graph metrics.  Returns the writeback rows."""
+    from pyspark.sql.types import DoubleType, StringType
+
+    from helium_arango_etl_spark.operators.relational import HOTSPOT_ANALYTICS
+
+    for name in ("city_graph_metrics", "city_hits"):
+        df = QUERIES[name](spark, sf_dir)
+        assert df.collect() == []
+        for f in df.schema.fields:
+            want = StringType() if f.name in ("city_key", "address") else DoubleType()
+            assert f.dataType == want, (name, f)
+    wb = QUERIES["hotspot_metrics_writeback"](spark, sf_dir)
+    metric_cols = [c for c in HOTSPOT_ANALYTICS if c != "rewards_5d"]
+    assert all(wb.schema[c].dataType == DoubleType() for c in metric_cols)
+    rows = wb.collect()
+    assert all(r[c] is None for r in rows for c in metric_cols)
+    return rows
+
+
+def test_empty_tables_city_metrics(spark, degen_empty):
+    tmp, _ = degen_empty
+    assert _assert_no_city_metrics(spark, tmp) == []
+
+
+def test_under_threshold_witnesses_city_metrics(spark, sf_dir, tmp_path):
+    """A witness set of fewer than MIN_CITY_SIZE arcs in all: edges reach
+    the metrics build, but no city clears the threshold."""
+    import os
+    import shutil
+
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from helium_arango_etl_spark.operators.graph import MIN_CITY_SIZE, witness_subgraph
+    from helium_arango_etl_spark.session import clear_caches
+
+    d = str(tmp_path / "sf")
+    os.makedirs(d)
+    for f in os.listdir(sf_dir):
+        shutil.copyfile(os.path.join(sf_dir, f), os.path.join(d, f))
+    li = pq.read_table(os.path.join(sf_dir, "lineitem.parquet"))
+    li = li.filter(pc.equal(li["l_returnflag"], "N")).slice(0, MIN_CITY_SIZE - 1)
+    pq.write_table(li, os.path.join(d, "lineitem.parquet"))
+    try:
+        assert 0 < witness_subgraph(spark, d).count() < MIN_CITY_SIZE
+        rows = _assert_no_city_metrics(spark, d)
+        assert len(rows) == pq.read_metadata(os.path.join(sf_dir, "supplier.parquet")).num_rows
+    finally:
+        clear_caches(spark)

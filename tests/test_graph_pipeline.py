@@ -60,10 +60,10 @@ def test_metrics_deterministic(spark, sf_dir, metrics):
 
 
 def test_metrics_rows_match_oracled_skeleton(spark, sf_dir, metrics):
-    """city_graph_nodes is the oracled SQL skeleton of the applyInPandas
-    metrics: identical (city_key, address) row sets means the driver's hash
-    check on the skeleton transitively pins the pandas path's grouping,
-    threshold, and dedup behavior."""
+    """city_graph_nodes is the oracled SQL skeleton of the driver-side
+    numpy metrics: identical (city_key, address) row sets means the
+    driver's hash check on the skeleton transitively pins the numpy path's
+    grouping, threshold, and dedup behavior."""
     from helium_arango_etl_spark.operators.graph import city_graph_nodes
 
     skel = {(r["city_key"], r["address"]) for r in city_graph_nodes(spark, sf_dir).collect()}
@@ -787,7 +787,7 @@ def test_sf01_witness_components_partition_invariants(spark, sf01):
 def test_sf01_city_hits_joins_agrees_with_pandas_twin(spark, sf01):
     """city_hits_joins' unrolled-HITS oracle is container-infeasible at
     sf0.1, so cross-check the declarative form against the INDEPENDENT
-    applyInPandas HITS path (city_hits) at sf0.1 instead: same row set,
+    driver-side numpy HITS path (city_hits) at sf0.1 instead: same row set,
     and scores agree within the per-step 9dp-quantization drift."""
     from pyspark.sql import functions as F
 
@@ -802,12 +802,12 @@ def test_sf01_city_hits_joins_agrees_with_pandas_twin(spark, sf01):
         for r in city_hits(spark, sf01).collect()
     }
     shared = set(a) & set(b)
-    # the pandas path drops sub-threshold cities; joins form covers all
+    # the numpy path drops sub-threshold cities; joins form covers all
     assert shared == set(b)
     assert len(shared) > 0
     # the joins form is a FIXED-iteration contract (HITS_ITERS steps,
     # exactness pinned by its DuckDB oracle at sf0.001/0.01) while the
-    # pandas path power-iterates to convergence — so agreement is an
+    # numpy path power-iterates to convergence — so agreement is an
     # envelope + correlation check, not bit equality
     worst = max(
         max(abs(a[k][0] - b[k][0]), abs(a[k][1] - b[k][1])) for k in shared

@@ -8,7 +8,34 @@ import math
 
 import pytest
 
-from helium_arango_etl_spark.functions.graphalgs import betweenness_centrality, hits, pagerank
+from helium_arango_etl_spark.functions import graphalgs
+from helium_arango_etl_spark.functions.graphalgs import ArcGraph
+
+
+# the toy graphs below are (src, dst, weight) edge lists checked per node
+# name: these wrap the array-valued algorithms into {node: score} maps
+def _graph(edges):
+    return ArcGraph.from_arcs(*(zip(*edges) if edges else ((), (), ())))
+
+
+def _by_node(graph, scores):
+    return {node: float(v) for node, v in zip(graph.nodes, scores)}
+
+
+def pagerank(edges):
+    g = _graph(edges)
+    return _by_node(g, graphalgs.pagerank(g))
+
+
+def betweenness_centrality(edges):
+    g = _graph(edges)
+    return _by_node(g, graphalgs.betweenness_centrality(g))
+
+
+def hits(edges):
+    g = _graph(edges)
+    hubs, auths = graphalgs.hits(g)
+    return _by_node(g, hubs), _by_node(g, auths)
 
 
 def test_pagerank_two_cycle():
@@ -95,6 +122,55 @@ def test_hits_two_cycle_symmetric():
 
 def test_hits_empty():
     assert hits([]) == ({}, {})
+
+
+def test_city_metrics_match_networkx(spark, sf_dir):
+    """Every city of the smoke data through combined_city_metrics against
+    networkx on the same keep-latest graph: betweenness with
+    ``nx.betweenness_centrality``, PageRank with the pure-Python
+    ``_pagerank_python`` (``nx.pagerank`` needs scipy) and HITS with
+    ``_hits_python`` on the graph without weights (J5 semantics)."""
+    nx = pytest.importorskip("networkx")
+    from networkx.algorithms.link_analysis.hits_alg import _hits_python
+    from networkx.algorithms.link_analysis.pagerank_alg import _pagerank_python
+
+    from helium_arango_etl_spark.operators.graph import (
+        MIN_CITY_SIZE,
+        combined_city_metrics,
+        witness_subgraph,
+    )
+
+    edges = (
+        witness_subgraph(spark, sf_dir)
+        .toPandas()
+        .sort_values(["city_key", "src", "dst", "edge_ts", "distance_m"])
+        .drop_duplicates(["city_key", "src", "dst"], keep="last")
+    )
+    got = {
+        (r["city_key"], r["address"]): r
+        for r in combined_city_metrics(spark, sf_dir).collect()
+    }
+    want_keys = set()
+    cities = 0
+    for city, arcs in edges.groupby("city_key"):
+        if len(arcs) < MIN_CITY_SIZE:
+            continue
+        cities += 1
+        weighted = nx.DiGraph()
+        weighted.add_weighted_edges_from(arcs[["src", "dst", "distance_m"]].itertuples(index=False))
+        unweighted = nx.DiGraph(list(zip(arcs["src"], arcs["dst"])))
+        bc = nx.betweenness_centrality(weighted)
+        pg = _pagerank_python(weighted)
+        hubs, auths = _hits_python(unweighted)
+        for node in weighted:
+            want_keys.add((city, node))
+            row = got[(city, node)]
+            assert row["betweenness_centrality"] == pytest.approx(bc[node], abs=1e-12)
+            assert row["pagerank"] == pytest.approx(pg[node], abs=1e-12)
+            assert row["hub_score"] == pytest.approx(hubs[node], abs=1e-12)
+            assert row["authority_score"] == pytest.approx(auths[node], abs=1e-12)
+    assert cities > 0
+    assert set(got) == want_keys
 
 
 def test_h3_fallback_latlng_null_safe(spark):

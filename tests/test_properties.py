@@ -13,7 +13,7 @@ import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
-from helium_arango_etl_spark.functions.graphalgs import betweenness_centrality, pagerank
+from .test_graphalgs import betweenness_centrality, pagerank
 
 # --- random small digraphs: list of (u, v, w) over <= 8 nodes ---
 
