@@ -13,9 +13,9 @@ the exact algorithms + defaults the reference invokes, over plain numpy:
 - :func:`pagerank` — power iteration on the weight-normalized transition
   matrix, uniform teleport, dangling mass redistributed uniformly,
   tol = 1e-6 * N on L1 error, max 100 iterations (networkx semantics).
-- :func:`betweenness_centrality` — Brandes' algorithm, unweighted BFS,
-  normalized by 1/((n-1)(n-2)) for directed graphs (networkx default
-  ``normalized=True``; no endpoint counting).
+- :func:`betweenness_centrality` — exact Brandes' algorithm on every
+  graph, unweighted BFS, normalized by 1/((n-1)(n-2)) for directed graphs
+  (networkx default ``normalized=True``; no endpoint counting).
 - :func:`hits` — networkx HITS on the graph without its weights.
 
 Each algorithm takes an :class:`ArcGraph`, built once per graph and shared
@@ -60,12 +60,15 @@ class ArcGraph(NamedTuple):
         return cls(nodes, s[keep], d[keep], np.asarray(weight, dtype=np.float64)[keep])
 
 
-def pagerank(
-    graph: ArcGraph,
-    alpha: float = 0.85,
-    max_iter: int = 100,
-    tol: float = 1.0e-6,
-) -> np.ndarray:
+# networkx defaults: PageRank damping and power-iteration limits, HITS limits
+PAGERANK_ALPHA = 0.85
+PAGERANK_MAX_ITER = 100
+PAGERANK_TOL = 1.0e-6
+HITS_MAX_ITER = 100
+HITS_TOL = 1.0e-8
+
+
+def pagerank(graph: ArcGraph) -> np.ndarray:
     """Weighted PageRank with networkx-default semantics."""
     n = len(graph.nodes)
     if n == 0:
@@ -79,51 +82,37 @@ def pagerank(
     with np.errstate(divide="ignore", invalid="ignore"):
         p = np.where(out_weight[src] > 0, w / out_weight[src], 0.0)
 
+    alpha = PAGERANK_ALPHA
     x = np.full(n, 1.0 / n)
     teleport = np.full(n, 1.0 / n)
-    for _ in range(max_iter):
+    for _ in range(PAGERANK_MAX_ITER):
         xlast = x
         contrib = np.bincount(dst, weights=alpha * xlast[src] * p, minlength=n)
         danglesum = alpha * xlast[dangling].sum()
         x = contrib + (danglesum + (1.0 - alpha)) * teleport
-        if np.abs(x - xlast).sum() < n * tol:
+        if np.abs(x - xlast).sum() < n * PAGERANK_TOL:
             break
     return x
 
 
-def betweenness_centrality(
-    graph: ArcGraph,
-    max_exact_nodes: int = 1500,
-    sample_sources: int = 256,
-) -> np.ndarray:
+def betweenness_centrality(graph: ArcGraph) -> np.ndarray:
     """Unweighted, normalized betweenness centrality (Brandes 2001) on the
-    directed graph — exactly ``nx.betweenness_centrality(g)`` defaults for
-    graphs up to ``max_exact_nodes``.
+    directed graph — exactly ``nx.betweenness_centrality(g)`` defaults.
 
-    Above that, the estimator of Brandes/Pich (2007): run the single-source
-    phase from a deterministic stride-sample of ``sample_sources`` sources
-    and scale by n/k.  Exact Brandes is O(V·E) — fine for the reference's
-    hundreds-of-nodes city graphs, unbounded at 100 TB where one city can
-    hold millions of vertices; sampling bounds per-group work at O(k·E)
-    while keeping the estimate unbiased.  Deterministic sample -> stable
-    hashes across runs.
+    The single-source phase runs only from nodes with out-arcs: a node
+    without one reaches nothing, so its pass adds exactly 0.  Sources run
+    in node order, so the sums are the same as over every node.  The work
+    is O(V·E), which the reference pays too (hundreds to a few thousand
+    nodes per city).
     """
     n = len(graph.nodes)
     src_arr, dst_arr = graph.src, graph.dst
-
-    if n > max_exact_nodes:
-        stride = max(1, n // sample_sources)
-        sources = range(0, n, stride)
-        scale_up = n / len(sources)
-    else:
-        sources = range(n)
-        scale_up = 1.0
 
     # level-synchronous Brandes: per BFS level, process all frontier edges as
     # one vectorized mask over the edge arrays — O(E·diameter) numpy work per
     # source instead of per-edge Python.
     bc = np.zeros(n)
-    for s in sources:
+    for s in np.unique(src_arr):
         sigma = np.zeros(n)
         sigma[s] = 1.0
         dist = np.full(n, -1, dtype=np.int64)
@@ -149,7 +138,6 @@ def betweenness_centrality(
         mask = dist >= 0
         mask[s] = False
         bc[mask] += delta[mask]
-    bc *= scale_up
     if n > 2:
         bc *= 1.0 / ((n - 1) * (n - 2))
     else:
@@ -157,11 +145,7 @@ def betweenness_centrality(
     return bc
 
 
-def hits(
-    graph: ArcGraph,
-    max_iter: int = 100,
-    tol: float = 1.0e-8,
-) -> tuple[np.ndarray, np.ndarray]:
+def hits(graph: ArcGraph) -> tuple[np.ndarray, np.ndarray]:
     """HITS (hub, authority) scores (J5 — the reference reserves the
     columns but leaves ``nx.algorithms.hits(g)`` commented out,
     arango_queries.py:168; implemented here so the capability exists).
@@ -178,7 +162,7 @@ def hits(
         return np.zeros(0), np.zeros(0)
     src, dst = graph.src, graph.dst
     h = np.full(n, 1.0 / n)
-    for _ in range(max_iter):
+    for _ in range(HITS_MAX_ITER):
         hlast = h
         a = np.bincount(dst, weights=hlast[src], minlength=n)
         amax = a.max()
@@ -188,7 +172,7 @@ def hits(
         hmax = h.max()
         if hmax > 0:
             h /= hmax
-        if np.abs(h - hlast).sum() < tol:
+        if np.abs(h - hlast).sum() < HITS_TOL:
             break
     hsum, asum = h.sum(), a.sum()
     if hsum > 0:

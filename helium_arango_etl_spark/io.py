@@ -1,4 +1,4 @@
-"""Table I/O: parquet readers and keyed sinks.
+"""Table I/O: parquet (and JDBC) readers and keyed parquet sinks.
 
 Every engine parquet read takes its schema from one footer, no inference
 job: :func:`parquet_schema` reads a single footer on the driver and the
@@ -49,8 +49,8 @@ anti/semi-join against the delta that merge_upsert/fresh_rows declare, so
 these implementations remain the engine-portable semantic spec (and the
 test oracle) for that MERGE; only the writer swaps.  Retention
 (apply_retention) likewise becomes a metadata-only ``DELETE WHERE ts <
-cutoff`` on a time-partitioned table — see apply_retention_partitioned for
-the partition-drop form implemented here.
+cutoff`` on a time-partitioned table; the store here is unpartitioned, so
+retention rewrites the collection.
 """
 
 from __future__ import annotations
@@ -61,8 +61,6 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-from .session import cached
 
 TABLES = (
     "region",
@@ -288,9 +286,9 @@ def read_jdbc_table(spark: SparkSession, url: str, table: str, **kwargs) -> Data
     return spark.read.format("jdbc").options(**jdbc_scan_options(url, table, **kwargs)).load()
 
 
-def spread(df: DataFrame, min_factor: int = 2, per_task_bytes: int = 0) -> DataFrame:
+def spread(df: DataFrame, per_task_bytes: int = 0) -> DataFrame:
     """Round-robin repartition to the cluster's parallelism — but ONLY when
-    the source is under-split (fewer than parallelism/min_factor partitions).
+    the source is under-split (fewer than half the parallelism in partitions).
 
     A parquet file is splittable at row-group boundaries only; a file written
     as one row group (or a gzip text file, etc.) scans as ONE task, so every
@@ -317,7 +315,7 @@ def spread(df: DataFrame, min_factor: int = 2, per_task_bytes: int = 0) -> DataF
 
     spark = df.sparkSession
     target = spark.sparkContext.defaultParallelism
-    threshold = max(2, target // min_factor)
+    threshold = max(2, target // 2)
     files = df.inputFiles()
     if not files:
         return df
@@ -413,200 +411,19 @@ def merge_ignore(old: DataFrame, new: DataFrame, key: str = "_key") -> DataFrame
     return old.unionByName(fresh_rows(old, new, key), allowMissingColumns=True)
 
 
-def merge_array_append(
-    old: DataFrame, new: DataFrame, key: str = "_key", array_col: str = "daily_balances"
-) -> DataFrame:
-    """Upsert with array append: matched keys get ``old.array ++ new.array``,
-    new keys insert as-is.
-
-    Reference: the deprecated per-row AQL ``UPSERT ... UPDATE {daily_balances:
-    APPEND(OLD.daily_balances, ...)}`` (arango_queries.py:77-87) — A8 in
-    SURVEY.md §2.  As one declarative plan: full-outer join on the key,
-    concat the arrays (null-safe on either side).  The reference replaced
-    this with snapshot recomputation (daily_balances_nested does that here);
-    this sink exists for capability parity and for true append-only stores.
-    """
-    o = old.select(key, F.col(array_col).alias("_old_arr"))
-    n = new.select(key, F.col(array_col).alias("_new_arr"))
-    appended = (
-        F.when(F.col("_old_arr").isNull(), F.col("_new_arr"))
-        .when(F.col("_new_arr").isNull(), F.col("_old_arr"))
-        .otherwise(F.concat("_old_arr", "_new_arr"))
-    )
-    return o.join(n, on=key, how="full_outer").select(key, appended.alias(array_col))
-
-
 def apply_retention(df: DataFrame, time_col: str, cutoff) -> DataFrame:
     """Keep rows at/after ``cutoff`` — the witness retention delete.
 
     Reference: AQL ``FILTER w.time < @cutoff REMOVE w`` (arango_queries.py:
     90-99, invoked etl.py:97).  As a declarative rewrite this is just the
-    complement filter; at scale it is a metadata-cheap rewrite of recent
-    partitions when the table is date-partitioned.
+    complement filter, and the store rewrites the collection with it.
     """
     return df.filter(F.col(time_col) >= F.lit(cutoff))
 
 
-def write_keyed(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """Persist a keyed collection table."""
-    df.write.mode(mode).parquet(path)
-
-
-def write_keyed_partitioned(df: DataFrame, path: str, partition_col: str) -> None:
-    """Persist a keyed collection partitioned by a (date-shaped) column.
-
-    Partitioning by event date is what turns the A7/L3 retention delete into
-    a metadata operation at scale — see :func:`apply_retention_partitioned`.
-    """
-    df.write.partitionBy(partition_col).mode("overwrite").parquet(path)
-
-
-def write_bucketed(
-    df: DataFrame, table: str, key: str, num_buckets: int, path: str | None = None
-) -> None:
-    """Persist as a bucketed+sorted table: rows hash-partitioned into
-    `num_buckets` files by `key`, sorted within each bucket.
-
-    This is the 100 TB co-located join: two fact tables bucketed the same
-    way (same key semantics, same bucket count) sort-merge join with ZERO
-    exchange — the shuffle the reference pays in Postgres on every sync
-    cycle (blockchain_queries.py:173 rewards⋈transactions) is paid once at
-    write time and amortized over every subsequent join.  Bucket metadata
-    lives in the session catalog; pass `path` to keep the data external.
-    """
-    writer = df.write.mode("overwrite").format("parquet").bucketBy(num_buckets, key).sortBy(key)
-    if path is not None:
-        writer = writer.option("path", path)
-    writer.saveAsTable(table)
-
-
-def apply_retention_partitioned(path: str, partition_col: str, cutoff: str) -> int:
-    """Retention delete as a PARTITION DROP: remove whole `col=value`
-    directories whose value sorts below the cutoff.  No data is read or
-    rewritten — at 100 TB this is the only viable form of the reference's
-    witness retention (AQL row-delete, arango_queries.py:90-99); the
-    row-level :func:`apply_retention` remains for unpartitioned stores.
-
-    Partition values must compare lexically (zero-padded dates: yyyy-MM-dd).
-    Returns the number of partitions dropped.
-    """
-    import shutil
-
-    dropped = 0
-    for entry in os.listdir(path):
-        if not entry.startswith(f"{partition_col}="):
-            continue
-        if entry.split("=", 1)[1] < cutoff:
-            shutil.rmtree(os.path.join(path, entry))
-            dropped += 1
-    return dropped
-
-
-ZORDER_BITS = 16
-
-
-def zorder_key(x_col: str, y_col: str, x_min, x_max, y_min, y_max):
-    """Morton (Z-order) curve key over two numeric columns, each
-    normalized to ZORDER_BITS-bit ranks against caller-supplied domain
-    bounds: bit-interleaving as a static codegen'd expression (32 shift
-    terms), no UDF.  Rows close on the Z-curve are close in BOTH
-    dimensions, so sorting files by this key tightens per-file min/max
-    stats on both columns at once — the data-skipping layout Delta's
-    OPTIMIZE ZORDER provides, as a plain column expression.
-
-    Bounds are parameters (not computed here) so a 100 TB writer uses
-    catalog/stat-store bounds instead of paying an extra full scan; rank
-    arithmetic clamps, so stale bounds degrade clustering, not
-    correctness.
-    """
-    from pyspark.sql import functions as F
-
-    top = (1 << ZORDER_BITS) - 1
-
-    def rank(col, lo, hi):
-        span = max(float(hi) - float(lo), 1.0)
-        return (
-            f"least({top}L, greatest(0L,"
-            f" cast(floor(({col} - {float(lo)!r}) * {top} / {span!r}) as bigint)))"
-        )
-
-    rx, ry = rank(x_col, x_min, x_max), rank(y_col, y_min, y_max)
-    terms = []
-    for b in range(ZORDER_BITS):
-        terms.append(f"shiftleft(shiftright(_zx, {b}) & 1, {2 * b})")
-        terms.append(f"shiftleft(shiftright(_zy, {b}) & 1, {2 * b + 1})")
-    return F.expr(" + ".join(terms).replace("_zx", f"({rx})").replace("_zy", f"({ry})"))
-
-
-# salts depend only on n (Murmur3 of a bigint is session-independent), but
-# the probe runs a Spark job, so memoize it per (session, n) with no input
-# files to fingerprint — one job per session however many write_zordered
-# calls follow (VERDICT r5 #5).
-def _identity_salts(spark: SparkSession, n: int) -> list[int]:
-    """For each partition id p in [0, n), the smallest bigint s with
-    pmod(hash(s), n) == p.  Repartitioning on the salt column then places
-    each value in EXACTLY the partition its id names — identity routing
-    through Spark's hash partitioner, no RDD-level custom partitioner.
-    One tiny driver-side job of O(n) rows; each residue is missed with
-    probability ~e^-64 per round, so the loop all but never repeats.
-    Memoized per (session, n): the result is a pure function of n."""
-
-    def probe() -> list[int]:
-        salts: dict[int, int] = {}
-        lo = 0
-        while len(salts) < n:
-            rows = (
-                spark.range(lo, lo + 64 * n)
-                .select("id", F.pmod(F.hash("id"), F.lit(n)).alias("p"))
-                .collect()
-            )
-            for r in rows:
-                salts.setdefault(r["p"], r["id"])
-            lo += 64 * n
-        return [salts[p] for p in range(n)]
-
-    return cached(spark, ("salts", n), None, probe)
-
-
-def write_zordered(
-    df: DataFrame, path: str, x_col: str, y_col: str, bounds, num_files: int = 8
-) -> None:
-    """Write parquet clustered along the Z-curve of (x_col, y_col):
-    deterministic file assignment by Z-range (top bits of the key — no
-    repartitionByRange, whose sampled boundaries are not reproducible),
-    rows sorted by Z within each file.  Point/range predicates on EITHER
-    column then prune most files on min/max footer stats alone —
-    tests/test_zorder.py measures the effect.
-
-    Bucket ids route to partitions by IDENTITY (per-partition salt
-    lookup, ADVICE r3): hashing the bucket id directly can land two
-    distinct Z-ranges in one file (leaving others empty), which widens
-    that file's min/max footer and degrades pruning unpredictably as
-    num_files grows.  With identity routing every output file holds
-    exactly one contiguous Z-interval — pinned in
-    tests/test_zorder.py::test_zorder_files_are_contiguous_intervals.
-    """
-    from pyspark.sql import functions as F
-
-    z = zorder_key(x_col, y_col, *bounds)
-    # deterministic range split: files = contiguous Z-intervals
-    chunk = (1 << (2 * ZORDER_BITS)) // num_files + 1
-    salts = _identity_salts(df.sparkSession, num_files)
-    # cast matters: the salts were probed as BIGINT and Murmur3 hashes
-    # int32 and int64 differently — an IntegerType literal would route
-    # to the wrong partition
-    salt_arr = F.array(*[F.lit(s).cast("long") for s in salts])
-    zdf = df.withColumn("_z", z).withColumn(
-        "_zsalt",
-        F.element_at(salt_arr, F.expr(f"cast(_z div {chunk} as int) + 1")),
-    )
-    (
-        zdf.repartition(num_files, F.col("_zsalt"))
-        .sortWithinPartitions("_z")
-        .drop("_z", "_zsalt")
-        .write.mode("overwrite")
-        .parquet(path)
-    )
+def write_keyed(df: DataFrame, path: str) -> None:
+    """Persist a keyed collection table, replacing what is at ``path``."""
+    df.write.mode("overwrite").parquet(path)
 
 
 TARGET_FILE_ROWS = 1_000_000
@@ -640,56 +457,3 @@ def compact_parquet(
     out = df.coalesce(files) if cur >= files else df.repartition(files)
     out.write.mode("overwrite").parquet(out_path)
     return files
-
-
-def read_jsonl_table(spark: SparkSession, path: str, schema) -> DataFrame:
-    """Scan a JSON-lines table with a CALLER-SUPPLIED schema — the
-    second source format beside parquet/JDBC (raw event feeds and API
-    dumps usually land as JSONL before compaction).
-
-    The explicit schema is the 100 TB discipline: without it Spark runs
-    a full inference pre-pass over every file (doubling the scan) and
-    silently widens types per run; with it the read is one pass with a
-    stable schema, and malformed lines land in the standard
-    ``_corrupt_record`` behavior (PERMISSIVE) instead of failing the job.
-    Column pruning still applies (JSON parsing skips unrequested fields);
-    predicate pushdown does not (no row-group stats) — which is exactly
-    why the compaction pass (`compact_parquet`) rewrites JSONL landings
-    to parquet before heavy querying.
-    """
-    return spark.read.schema(schema).json(path)
-
-
-def write_jsonl(df: DataFrame, path: str) -> None:
-    """Write a DataFrame as JSON-lines (the interchange/landing format)."""
-    df.write.mode("overwrite").json(path)
-
-
-def read_csv_table(
-    spark: SparkSession, path: str, schema, header: bool = True, sep: str = ","
-) -> DataFrame:
-    """Scan a CSV table with a CALLER-SUPPLIED schema — the third
-    landing format beside parquet/JDBC/JSONL (exports from spreadsheets
-    and legacy warehouses arrive as CSV).
-
-    Same 100 TB discipline as `read_jsonl_table`: an explicit schema
-    avoids the inference pre-pass and per-run type drift; PERMISSIVE
-    mode routes malformed rows to ``_corrupt_record`` instead of
-    failing the job.  CSV is not splittable-with-quotes-spanning-lines
-    and carries no stats, so — like JSONL — landings are compacted to
-    parquet (`compact_parquet`) before heavy querying; `spread()`
-    covers the interim when a single fat CSV would otherwise scan as
-    one task.
-    """
-    return (
-        spark.read.schema(schema)
-        .option("header", str(header).lower())
-        .option("sep", sep)
-        .option("mode", "PERMISSIVE")
-        .csv(path)
-    )
-
-
-def write_csv(df: DataFrame, path: str, header: bool = True) -> None:
-    """Write a DataFrame as CSV (the interchange/export format)."""
-    df.write.mode("overwrite").option("header", str(header).lower()).csv(path)

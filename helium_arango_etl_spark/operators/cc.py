@@ -10,10 +10,10 @@ detected via the monotone-decreasing label sum — one scalar action per
 iteration, orchestration-only driver work.
 
 Hash-to-min propagation moves the component minimum one hop per iteration
-(iterations ~ component diameter); for adversarial long-chain graphs at
-corpus scale use :func:`propagate_large_small_star` (Kiveris et al.),
-which converges in O(log²) rounds with the same per-round join shape —
-equivalence with min-label is pinned in tests/test_edge_cases.py.
+(iterations ~ component diameter).  Both callers' graphs are shallow
+(near-dup clusters, city witness graphs), so the iteration cap holds; an
+adversarial long-chain graph exceeds it and fails loudly
+(:class:`ConvergenceError`) rather than returning partial labels.
 """
 
 from __future__ import annotations
@@ -46,8 +46,6 @@ def propagate_min_labels(
     cap), raises :class:`ConvergenceError` when ``strict`` (default) or
     emits a ``warnings.warn`` and returns the partial labels otherwise —
     never silently returns a non-converged labeling as if converged.
-    The scale fix for a legitimately long-diameter graph is
-    large-star/small-star (module doc), not a bigger cap.
     """
     labels = labels.localCheckpoint()
     prev_sum = labels.agg(F.sum("label")).first()[0]
@@ -79,89 +77,3 @@ def propagate_min_labels(
         warnings.warn(msg, stacklevel=2)
     return labels
 
-
-def propagate_large_small_star(
-    nodes: DataFrame,
-    und: DataFrame,
-    keys: list[str],
-    max_iters: int = 15,
-    strict: bool = True,
-) -> DataFrame:
-    """Connected components via alternating large-star/small-star rounds
-    (Kiveris et al., "Connected Components in MapReduce and Beyond") — the
-    adversarial-graph fallback to :func:`propagate_min_labels`: converges
-    in O(log² n) rounds regardless of component DIAMETER, so a 10M-node
-    path graph needs ~dozens of rounds instead of 10M.
-
-    ``nodes``: (*keys, node) — every node, including isolated ones;
-    ``und``: (*keys, a, b) undirected edge list (both directions present);
-    node ids numeric.  Returns (*keys, node, label) with label = the
-    component's minimum node id — same contract as propagate_min_labels.
-
-    Per round: each star op is one min-groupBy plus one keyed join of the
-    (shrinking) edge list — the same (*keys, u, v) scalar-triple shuffle
-    shape as min-label propagation, two ops per round.  Convergence is a
-    fixpoint of the edge multiset, detected with one (count, hash-sum)
-    scalar action; the cap raises :class:`ConvergenceError` (or warns
-    with ``strict=False``) exactly like the min-label path.
-    """
-    u, v = F.col("u"), F.col("v")
-
-    def large_star(e: DataFrame) -> DataFrame:
-        sym = e.unionByName(e.select(*keys, v.alias("u"), u.alias("v")))
-        mins = sym.groupBy(*keys, "u").agg(F.least(F.min("v"), u).alias("m"))
-        return (
-            sym.join(mins, [*keys, "u"])
-            .filter(v > u)
-            .select(*keys, v.alias("u"), F.col("m").alias("v"))
-            .distinct()
-        )
-
-    def small_star(e: DataFrame) -> DataFrame:
-        # direct every edge larger -> smaller, then connect each node's
-        # smaller neighborhood (and itself) to its minimum
-        directed = e.select(
-            *keys, F.greatest(u, v).alias("u"), F.least(u, v).alias("v")
-        ).filter(u != v)
-        mins = directed.groupBy(*keys, "u").agg(F.min("v").alias("m"))
-        nbrs = directed.join(mins, [*keys, "u"]).filter(v != F.col("m")).select(
-            *keys, v.alias("u"), F.col("m").alias("v")
-        )
-        self_edges = mins.select(*keys, "u", F.col("m").alias("v"))
-        return nbrs.unionByName(self_edges).distinct()
-
-    def fingerprint(e: DataFrame):
-        # decimal(38,0) sum: xxhash64 spans the full int64 range, so a
-        # bigint sum would overflow under ANSI mode
-        h = F.xxhash64(*keys, "u", "v").cast("decimal(38,0)")
-        return e.agg(F.count(F.lit(1)), F.coalesce(F.sum(h), F.lit(0))).first()
-
-    edges = und.select(*keys, F.col("a").alias("u"), F.col("b").alias("v")).filter(
-        F.col("a") != F.col("b")
-    ).distinct().localCheckpoint()
-    prev = fingerprint(edges)
-    converged = False
-    for _ in range(max_iters):
-        edges = small_star(large_star(edges)).localCheckpoint()
-        cur = fingerprint(edges)
-        if cur == prev:
-            converged = True
-            break
-        prev = cur
-    if not converged:
-        msg = (
-            f"large-star/small-star did not converge within {max_iters} rounds"
-        )
-        if strict:
-            raise ConvergenceError(msg)
-        import warnings
-
-        warnings.warn(msg, stacklevel=2)
-    # converged edges are stars rooted at component minima: label(node) =
-    # min over incident edges' endpoints; isolated nodes label themselves
-    sym = edges.unionByName(edges.select(*keys, F.col("v").alias("u"), F.col("u").alias("v")))
-    root = sym.groupBy(*keys, "u").agg(F.least(F.min("v"), F.col("u")).alias("label"))
-    return (
-        nodes.join(root.select(*keys, F.col("u").alias("node"), "label"), [*keys, "node"], "left")
-        .select(*keys, "node", F.coalesce("label", F.col("node")).alias("label"))
-    )

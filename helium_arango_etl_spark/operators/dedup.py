@@ -370,11 +370,8 @@ def decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # Connected-components convergence bound.  Hash-to-min propagation moves the
 # component-minimum one hop per iteration, so iterations ~ cluster diameter;
-# near-dup clusters are shallow (star-ish around a template).  For an
-# adversarial long-chain graph at corpus scale, switch to the large-star/
-# small-star alternation (Kiveris et al., "Connected Components in MapReduce
-# and Beyond"), which converges in O(log²) rounds — the per-iteration join
-# shape below is unchanged.
+# near-dup clusters are shallow (star-ish around a template).  A deeper
+# cluster raises ConvergenceError instead of returning partial labels.
 MAX_CC_ITERS = 20
 
 

@@ -303,8 +303,8 @@ def hotspot_metrics_writeback(spark: SparkSession, sf_dir: str) -> DataFrame:
     return hotspot_document(spark, sf_dir, supplier_rewards(spark, sf_dir), metrics)
 
 
-# Weakly-connected-components convergence bound (see operators.dedup
-# MAX_CC_ITERS for the large-star/small-star note — same trade-off).
+# Weakly-connected-components convergence bound (same trade-off as
+# operators.dedup MAX_CC_ITERS: a deeper city graph raises ConvergenceError).
 MAX_WCC_ITERS = 25
 
 
@@ -2530,11 +2530,16 @@ def _release_local_checkpoint(df: DataFrame) -> None:
     must be released at the RDD layer (ADVICE r8: without this an
     iterative loop pins ITERS+1 checkpointed copies of its state in
     executor storage).  Reaches the checkpointed RDD through the
-    analyzed LogicalRDD; wrapped so any change in that internal surface
-    degrades to the old keep-everything behavior, never to an error.
+    analyzed LogicalRDD and drops its blocks with the context's
+    ``unpersistRDD``, the release ``RDD.unpersist`` makes after warning
+    that a locally checkpointed RDD cannot be recomputed (a superseded
+    handle is never read again).  Wrapped so any change in that internal
+    surface degrades to the old keep-everything behavior, never to an
+    error.
     """
     try:
-        df._jdf.queryExecution().analyzed().rdd().unpersist(False)
+        rdd = df._jdf.queryExecution().analyzed().rdd()
+        rdd.sparkContext().unpersistRDD(rdd.id(), False)
     except Exception:
         pass
 

@@ -108,11 +108,6 @@ def payment_edges(events: DataFrame) -> DataFrame:
     )
 
 
-def build_payments(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """payments edges over the whole events table, unbounded."""
-    return payment_edges(read_table(spark, sf_dir, "events"))
-
-
 def build_witnesses(spark: SparkSession, sf_dir: str) -> DataFrame:
     """witnesses edges: the session's persisted valid edge set
     (``witness_subgraph``, which the metrics writeback reads too),

@@ -25,6 +25,7 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.streaming import StreamingQuery
 
 from ..io import apply_retention, normalize_event_ts, parquet_schema
 from ..plans.sync import _replace, _write_merged, payment_edges, read_collection
@@ -51,11 +52,12 @@ def follow_payments(
     out_dir: str,
     checkpoint_dir: str,
     processing_time: str | None = None,
-) -> None:
+) -> StreamingQuery:
     """Run the follower: stream events -> payment edges -> idempotent merge
-    per micro-batch.  ``processing_time=None`` runs availableNow (bounded
-    backfill, L1); a value like '1200 seconds' reproduces the reference's
-    poll cadence (L2)."""
+    per micro-batch, and return the query.  ``processing_time=None`` runs
+    availableNow (bounded backfill, L1) and returns once it has finished;
+    a value like '1200 seconds' reproduces the reference's poll cadence
+    (L2) and returns the running query for the caller to await or stop."""
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         _write_merged(batch_df.sparkSession, out_dir, "payments", batch_df, "ignore")
@@ -63,11 +65,11 @@ def follow_payments(
     writer = payment_edges(_events_stream(spark, sf_dir)).writeStream.foreachBatch(sink).option(
         "checkpointLocation", checkpoint_dir
     )
-    if processing_time is None:
-        query = writer.trigger(availableNow=True).start()
-        query.awaitTermination()
-    else:
-        writer.trigger(processingTime=processing_time).start()
+    if processing_time is not None:
+        return writer.trigger(processingTime=processing_time).start()
+    query = writer.trigger(availableNow=True).start()
+    query.awaitTermination()
+    return query
 
 
 def evict_witnesses(spark: SparkSession, out_dir: str, cutoff) -> None:

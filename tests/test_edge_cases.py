@@ -199,51 +199,3 @@ def test_propagate_min_labels_convergence_guard(spark):
     assert partial.count() == 10
     done = propagate_min_labels(labels, und, keys=[], max_iters=15)
     assert done.agg(F.max("label")).first()[0] == 0
-
-
-def test_large_small_star_matches_min_label(spark):
-    """propagate_large_small_star must produce the identical component
-    labeling as min-label propagation on a keyed random graph."""
-    import random
-
-    from helium_arango_etl_spark.operators.cc import (
-        propagate_large_small_star,
-        propagate_min_labels,
-    )
-
-    rng = random.Random(42)
-    edges = [
-        (k, rng.randrange(60), rng.randrange(60)) for k in ("x", "y") for _ in range(45)
-    ]
-    und = spark.createDataFrame(
-        edges + [(k, b, a) for k, a, b in edges], "city string, a long, b long"
-    ).filter("a != b")
-    nodes = (
-        und.select("city", F.col("a").alias("node"))
-        .unionByName(und.select("city", F.col("b").alias("node")))
-        .distinct()
-    )
-    ref = propagate_min_labels(
-        nodes.withColumn("label", F.col("node")), und, keys=["city"], max_iters=60
-    )
-    got = propagate_large_small_star(nodes, und, keys=["city"], max_iters=15)
-    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, ref.collect()))
-
-
-def test_large_small_star_long_chain_and_isolated(spark):
-    """The raison d'être: a diameter-200 path converges in O(log^2) star
-    rounds where min-label would need ~200 hops; isolated nodes label
-    themselves."""
-    from helium_arango_etl_spark.operators.cc import propagate_large_small_star
-
-    chain = [(a, a + 1) for a in range(200)]
-    und = spark.createDataFrame(
-        chain + [(b, a) for a, b in chain], "a long, b long"
-    )
-    nodes = spark.createDataFrame(
-        [(i,) for i in range(201)] + [(999,)], "node long"
-    )
-    out = propagate_large_small_star(nodes, und, keys=[], max_iters=12)
-    rows = {r["node"]: r["label"] for r in out.collect()}
-    assert all(rows[i] == 0 for i in range(201))
-    assert rows[999] == 999

@@ -71,6 +71,32 @@ def test_metrics_rows_match_oracled_skeleton(spark, sf_dir, metrics):
     assert got == skel
 
 
+def test_released_local_checkpoints_leave_the_persist_list(spark):
+    """A two-step checkpoint loop through _release_local_checkpoint keeps
+    only the latest state persisted: each superseded localCheckpoint's
+    RDD leaves the context's persist list."""
+    from helium_arango_etl_spark.operators.graph import _release_local_checkpoint
+
+    def persisted():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+    def rdd_id(df):
+        return df._jdf.queryExecution().analyzed().rdd().id()
+
+    state = spark.range(100).localCheckpoint()
+    superseded = []
+    for _ in range(2):
+        nxt = state.selectExpr("id + 1 AS id").localCheckpoint()
+        assert rdd_id(state) in persisted()
+        superseded.append(rdd_id(state))
+        _release_local_checkpoint(state)
+        state = nxt
+    assert not set(superseded) & persisted()
+    assert rdd_id(state) in persisted()
+    assert state.agg(F.min("id"), F.max("id")).first() == (2, 101)
+    _release_local_checkpoint(state)
+
+
 def test_city_pagerank_joins_sums_to_one_per_city(spark, sf_dir):
     """Declarative PageRank invariant: damped power iteration with dangling
     redistribution conserves probability mass — ranks in every city sum to

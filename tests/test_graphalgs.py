@@ -92,6 +92,28 @@ def test_betweenness_split_paths():
     assert bc["c"] == pytest.approx(0.5 / 6, abs=1e-12)
 
 
+def test_betweenness_exact_above_a_thousand_nodes():
+    # 800 sources -> 10 hubs -> 800 sinks, each hub serving its own 80
+    # sources and 80 sinks: a hub lies on the one shortest path of each of
+    # its 80*80 (source, sink) pairs, and no other node lies inside a path
+    hubs, fan = 10, 80
+    edges = [
+        (f"{end}{h:02d}_{i:02d}", f"h{h:02d}", 1.0)
+        if end == "a"
+        else (f"h{h:02d}", f"{end}{h:02d}_{i:02d}", 1.0)
+        for h in range(hubs)
+        for i in range(fan)
+        for end in ("a", "z")
+    ]
+    bc = betweenness_centrality(edges)
+    n = len(bc)
+    assert n == 2 * hubs * fan + hubs == 1610
+    expected = fan * fan / ((n - 1) * (n - 2))
+    assert expected == pytest.approx(0.002474, abs=1e-6)
+    for node, v in bc.items():
+        assert v == pytest.approx(expected if node[0] == "h" else 0.0, abs=1e-15), node
+
+
 def test_tiny_graphs_zero():
     assert betweenness_centrality([("a", "b", 1.0)]) == {"a": 0.0, "b": 0.0}
     assert pagerank([]) == {}

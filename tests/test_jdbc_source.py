@@ -78,60 +78,3 @@ def test_read_jdbc_table_wires_reader():
     )
     assert result == "loaded" and fmt == "jdbc"
     assert opts["numPartitions"] == "8" and opts["dbtable"] == "rewards"
-
-
-def test_jsonl_roundtrip_matches_parquet(spark, sf_dir, tmp_path):
-    """documents written as JSONL and read back with the explicit schema
-    must equal the parquet scan row-for-row; the read plan must carry the
-    supplied schema (no inference pass) and prune to requested columns."""
-    from pyspark.sql import functions as F
-
-    from helium_arango_etl_spark.io import read_jsonl_table, read_table, write_jsonl
-
-    docs = read_table(spark, sf_dir, "documents")
-    p = str(tmp_path / "docs_jsonl")
-    write_jsonl(docs, p)
-    back = read_jsonl_table(spark, p, docs.schema)
-    assert sorted(map(tuple, back.collect())) == sorted(map(tuple, docs.collect()))
-
-    # pruned projection: the scan's ReadSchema carries only doc_id
-    import io as _io
-    import re
-    from contextlib import redirect_stdout
-
-    buf = _io.StringIO()
-    with redirect_stdout(buf):
-        back.select("doc_id").explain("formatted")
-    plan = buf.getvalue()
-    widths = [
-        len(s.split(",")) for s in re.findall(r"ReadSchema: struct<([^>]*)", plan)
-    ]
-    assert widths and max(widths) == 1, plan
-
-    # malformed line is PERMISSIVE-null, not a job failure
-    (tmp_path / "docs_jsonl" / "bad.json").write_text('{"doc_id": "not-a-number"}\n')
-    n = read_jsonl_table(spark, p, docs.schema).filter(F.col("doc_id").isNull()).count()
-    assert n >= 1
-
-
-def test_csv_roundtrip_schema_and_malformed(spark, sf_dir, tmp_path):
-    """CSV source: explicit-schema read, header handling, roundtrip
-    equality, and PERMISSIVE malformed handling (io.read_csv_table)."""
-    from pyspark.sql import functions as F
-
-    from helium_arango_etl_spark.io import read_csv_table, read_table, write_csv
-
-    src = read_table(spark, sf_dir, "region")
-    path = str(tmp_path / "region_csv")
-    write_csv(src, path)
-    back = read_csv_table(spark, path, src.schema)
-    assert sorted(map(tuple, back.collect())) == sorted(map(tuple, src.collect()))
-
-    # malformed rows: a line with a non-numeric key under an INT column
-    bad = tmp_path / "bad.csv"
-    bad.write_text("r_regionkey,r_name\nnotanint,EUROPE\n7,ASIA\n")
-    schema = "r_regionkey BIGINT, r_name STRING"
-    got = read_csv_table(spark, str(bad), schema)
-    rows = got.collect()
-    assert len(rows) == 2  # PERMISSIVE keeps the malformed row as nulls
-    assert sorted(r.r_regionkey for r in rows if r.r_regionkey is not None) == [7]

@@ -16,6 +16,7 @@ from contextlib import redirect_stdout
 
 import pytest
 
+from helium_arango_etl_spark.io import read_table
 from helium_arango_etl_spark.registry import QUERIES
 
 
@@ -89,38 +90,6 @@ def test_city_metrics_plan_no_python_stage(spark, sf_dir):
         for node in ("FlatMapGroupsInPandas", "ArrowEvalPython", "BatchEvalPython"):
             assert node not in plan, plan
     assert "Exchange" not in metrics, metrics
-
-
-def test_bucketed_join_is_shuffle_free(spark, sf_dir, tmp_path):
-    """Two tables bucketed on their join keys (same bucket count) must
-    sort-merge join with ZERO Exchange: the write-time bucketing pre-pays
-    the shuffle once, every later fact-fact join rides it for free — the
-    co-location strategy for repeated 100 TB joins."""
-    from pyspark.sql import functions as F
-
-    from helium_arango_etl_spark.io import read_table, write_bucketed
-
-    li = read_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_quantity")
-    orders = read_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    write_bucketed(li, "li_bucketed", "l_orderkey", 8, str(tmp_path / "li_b"))
-    write_bucketed(orders, "ord_bucketed", "o_orderkey", 8, str(tmp_path / "ord_b"))
-
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        joined = spark.table("li_bucketed").join(
-            spark.table("ord_bucketed"), F.col("l_orderkey") == F.col("o_orderkey")
-        )
-        plan = plan_of(joined)
-        assert "SortMergeJoin" in plan, plan
-        assert not re.findall(r"\(\d+\) Exchange\b", plan), plan
-        assert joined.count() == li.join(
-            orders, li.l_orderkey == orders.o_orderkey
-        ).count()
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-        spark.sql("DROP TABLE IF EXISTS li_bucketed")
-        spark.sql("DROP TABLE IF EXISTS ord_bucketed")
 
 
 def test_single_scan_lsh_pipeline(spark, sf_dir):
@@ -925,3 +894,27 @@ def test_compaction_shards_single_keyed_window(spark, sf_dir):
     assert "Join" not in plan, plan
     assert "CartesianProduct" not in plan, plan
     assert plan.count("Window") == 2, plan  # one Window node
+
+
+def test_spread_heuristic_no_rdd_probe(spark, sf_dir, tmp_path):
+    """spread() must fan out a single-file source, leave a many-split
+    source alone, and pass through plans with no scannable inputs."""
+    from helium_arango_etl_spark.io import _size_to_bytes, spread
+
+    assert _size_to_bytes("134217728") == 134217728
+    assert _size_to_bytes("134217728b") == 134217728
+    assert _size_to_bytes("128m") == 128 << 20
+    assert _size_to_bytes("128MB") == 128 << 20
+
+    one = str(tmp_path / "one")
+    read_table(spark, sf_dir, "events").coalesce(1).write.parquet(one)
+    df1 = spark.read.parquet(one)
+    assert spread(df1).rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
+
+    many = str(tmp_path / "many")
+    read_table(spark, sf_dir, "events").repartition(64).write.parquet(many)
+    df2 = spark.read.parquet(many)
+    assert spread(df2) is df2
+
+    rng = spark.range(10)  # no input files: untouched
+    assert spread(rng) is rng

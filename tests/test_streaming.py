@@ -4,7 +4,8 @@ be a no-op."""
 
 from __future__ import annotations
 
-from helium_arango_etl_spark.plans.sync import backfill_payments, build_payments, read_collection
+from helium_arango_etl_spark.io import read_table
+from helium_arango_etl_spark.plans.sync import backfill_payments, payment_edges, read_collection
 from helium_arango_etl_spark.streaming.follower import evict_witnesses, follow_payments
 
 from .test_sync_plans import _files
@@ -20,8 +21,31 @@ def test_stream_matches_batch(spark, sf_dir, tmp_path):
     ckpt = str(tmp_path / "ckpt")
     follow_payments(spark, sf_dir, out, ckpt)  # availableNow backfill
     streamed = read_collection(spark, out, "payments")
-    batch = build_payments(spark, sf_dir).dropDuplicates(["_key"])
+    batch = payment_edges(read_table(spark, sf_dir, "events")).dropDuplicates(["_key"])
     assert _hash(streamed) == _hash(batch)
+
+
+def test_processing_time_follower_returns_its_query(spark, sf_dir, tmp_path):
+    """The polling trigger (L2) hands back the running query: the caller
+    drains it and stops it, and the store then holds the same payments
+    key set as the availableNow backfill."""
+    polled = str(tmp_path / "polled")
+    query = follow_payments(spark, sf_dir, polled, str(tmp_path / "ckpt_polled"), processing_time="1 second")
+    try:
+        assert query.isActive
+        query.processAllAvailable()
+    finally:
+        query.stop()
+    assert not query.isActive
+    backfilled = str(tmp_path / "backfilled")
+    done = follow_payments(spark, sf_dir, backfilled, str(tmp_path / "ckpt_backfilled"))
+    assert not done.isActive
+
+    def keys(out):
+        return sorted(r["_key"] for r in read_collection(spark, out, "payments").select("_key").collect())
+
+    assert keys(polled) == keys(backfilled)
+    assert keys(polled)
 
 
 def test_checkpointed_rerun_is_noop(spark, sf_dir, tmp_path):
@@ -57,8 +81,6 @@ def test_stream_appends_to_batch_built_store(spark, sf_dir, tmp_path):
     events table onto a store backfilled from half of it adds files but
     leaves the committed ones untouched (same names, sizes, mtimes), and
     the re-delivered keys are not duplicated."""
-    from helium_arango_etl_spark.io import read_table
-
     half = tmp_path / "half"
     read_table(spark, sf_dir, "events").filter("event_id % 2 = 0").write.parquet(str(half / "events.parquet"))
     out = str(tmp_path / "store")
@@ -68,5 +90,5 @@ def test_stream_appends_to_batch_built_store(spark, sf_dir, tmp_path):
     after = _files(tmp_path / "store" / "payments")
     assert {f: after[f] for f in before} == before
     assert len(after) > len(before)
-    batch = build_payments(spark, sf_dir).dropDuplicates(["_key"])
+    batch = payment_edges(read_table(spark, sf_dir, "events")).dropDuplicates(["_key"])
     assert _hash(read_collection(spark, out, "payments")) == _hash(batch)

@@ -12,13 +12,14 @@ import warnings
 import pytest
 from pyspark.sql import functions as F
 
+from helium_arango_etl_spark.io import read_table
 from helium_arango_etl_spark.operators.relational import hotspot_document
 from helium_arango_etl_spark.plans import sync
 from helium_arango_etl_spark.plans.sync import (
     MAX_DATA_FILES,
     _write_merged,
     backfill_payments,
-    build_payments,
+    payment_edges,
     read_collection,
     sync_inventories,
 )
@@ -122,7 +123,7 @@ def test_backfill_covers_unbounded_build(spark, sf_dir, tmp_path):
     out = str(tmp_path / "store")
     backfill_payments(spark, sf_dir, out, n_chunks=2)
     stored = read_collection(spark, out, "payments")
-    direct = build_payments(spark, sf_dir)  # no bounds
+    direct = payment_edges(read_table(spark, sf_dir, "events"))  # no bounds
     assert stored.count() == direct.dropDuplicates(["_key"]).count()
 
 
@@ -147,23 +148,6 @@ def test_witnesses_keep_latest_unique_pairs(spark, sf_dir):
     w = build_witnesses(spark, sf_dir)
     assert w.count() == w.select("_key").distinct().count()
     assert w.filter(~F.col("_from").startswith("hotspots/")).count() == 0
-
-
-def test_merge_array_append(spark):
-    """A8: upsert-with-array-append (the reference's deprecated AQL form)."""
-    from helium_arango_etl_spark.io import merge_array_append
-
-    old = spark.createDataFrame(
-        [("a", [1, 2]), ("b", [3])], ["_key", "daily_balances"]
-    )
-    new = spark.createDataFrame(
-        [("b", [4, 5]), ("c", [6])], ["_key", "daily_balances"]
-    )
-    got = {
-        r["_key"]: r["daily_balances"]
-        for r in merge_array_append(old, new).collect()
-    }
-    assert got == {"a": [1, 2], "b": [3, 4, 5], "c": [6]}
 
 
 def test_partial_upsert_merges_attributes(spark, tmp_path):
@@ -219,38 +203,6 @@ def test_metrics_upsert_keeps_hotspot_attributes(spark, sf_dir, tmp_path):
     assert any(r["pagerank"] is not None for r in rows)
     for c in ("hub_score", "authority_score"):
         assert all((r[c] is None) == (r["pagerank"] is None) for r in rows), c
-
-
-def test_partitioned_retention_drop(spark, sf_dir, tmp_path):
-    """A7/L3 at scale: partition-drop retention equals the row-level filter
-    without reading or rewriting surviving data."""
-    import pyspark.sql.functions as F
-
-    from helium_arango_etl_spark.io import (
-        apply_retention_partitioned,
-        write_keyed_partitioned,
-    )
-    from helium_arango_etl_spark.plans.sync import build_witnesses
-
-    wit = build_witnesses(spark, sf_dir).withColumn(
-        "edge_date", F.date_format("time", "yyyy-MM-dd")
-    )
-    path = str(tmp_path / "witnesses_part")
-    write_keyed_partitioned(wit, path, "edge_date")
-
-    dates = sorted(r["edge_date"] for r in wit.select("edge_date").distinct().collect())
-    assert len(dates) >= 3
-    cutoff = dates[len(dates) // 2]
-    expected = wit.filter(F.col("edge_date") >= cutoff)
-
-    dropped = apply_retention_partitioned(path, "edge_date", cutoff)
-    assert dropped == sum(1 for d in dates if d < cutoff) > 0
-
-    kept = spark.read.parquet(path)
-    assert kept.count() == expected.count()
-    assert sorted(r["_key"] for r in kept.select("_key").collect()) == sorted(
-        r["_key"] for r in expected.select("_key").collect()
-    )
 
 
 def test_compact_parquet_reduces_files_preserving_rows(spark, sf_dir, tmp_path):
